@@ -106,12 +106,16 @@ def replace_keys(df: DataFrame, path: str, keys: Sequence[str],
     tmp = path.rstrip("/") + ".__staging__"
     _rm(tmp)  # leftover from a crashed prior run
     old = spark.read.parquet(path)
+    cols = old.columns
     if partition_by:
         # prune the merge to the partitions present in the batch;
         # untouched partitions are never read or rewritten
         pvals = df.select(*partition_by).distinct()
         old = old.join(F.broadcast(pvals), list(partition_by), "left_semi")
-    keep = old.join(df.select(*keys).distinct(), list(keys), "left_anti")
+    # a join USING keys moves the key columns first and unionByName
+    # keeps the left side's order: restore the stored column order
+    keep = (old.join(df.select(*keys).distinct(), list(keys), "left_anti")
+            .select(*cols))
     merged = keep.unionByName(df)
     overwrite(merged, tmp, partition_by)  # the one data write
     if partition_by:
@@ -149,8 +153,9 @@ def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame,
     tmp = path.rstrip("/") + ".__staging__"
     _rm(tmp)
     old = spark.read.parquet(path)
-    keep = old.join(keys_df.select(*keys).distinct(),
-                    list(keys), "left_anti")
+    keep = (old.join(keys_df.select(*keys).distinct(),
+                     list(keys), "left_anti")
+            .select(*old.columns))  # the join moved the keys first
     overwrite(keep, tmp, partition_by)
     swap_into_place(tmp, path)
 

@@ -11,7 +11,17 @@ hold on a 1000-executor cluster reading 100 TB:
 - broadcast threshold raised: dimension tables (plant_mapping-like,
   region/nation/part) are KBs-to-MBs and must never sort-merge;
 - Arrow enabled so the few Pandas-UDF operators batch efficiently;
-- session timezone pinned to UTC for deterministic calendar math.
+- session timezone pinned to UTC for deterministic calendar math;
+- codegen cache sized to the engine's plan working set.  The cache
+  holds the Janino-compiled classes of generated code (whole-stage
+  codegen, projections, predicates), keyed by their source, so a plan
+  seen before skips the compile and runs bytecode HotSpot has already
+  JIT-compiled.  One nightly DAG needs ~450 entries (counts beside
+  DEFAULT_CONF); Spark's default of 100 evicts each class before its
+  reuse, so every nightly, even an identical re-run of one month,
+  recompiled ~400 classes and JIT-compiled them again.  A STATIC
+  conf: it takes effect only when the session is first created --
+  ``getOrCreate`` on an existing session keeps the old size.
 """
 
 from __future__ import annotations
@@ -31,6 +41,17 @@ DEFAULT_CONF: dict[str, str] = {
     # dynamic partition overwrite backs the idempotent
     # delete-slice-then-append write pattern (see io/writers.py)
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    # Janino codegen cache, sized to the engine's plan WORKING SET
+    # (static conf: read once, when the session's JVM starts).
+    # Distinct generated classes compiled by one session with an
+    # unbounded cache, 4 cores: perfbench nightly_dag (30 sites, six
+    # nightlies incl. the re-run of month 0) 595 -- 454 for the first
+    # month's two runs, then 12-77 per new month; perfbench
+    # lakehouse_rw 164; bench.py's 56 headline queries at sf0.1 (two
+    # samples each, fixtures included) 1178.  2000 holds the largest
+    # with ~1.7x headroom; the default 100 is below one nightly's
+    # working set, so the LRU evicted every class before its reuse.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 
@@ -77,3 +98,13 @@ def get_spark(app_name: str = "decarb-spark", master: str | None = None,
             "spark.sql.shuffle.partitions",
             str(max(32, spark.sparkContext.defaultParallelism)))
     return spark
+
+
+def classes_compiled(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this session's JVM
+    (driver and, in local mode, executors): Spark's
+    ``CodegenMetrics`` compilation counter.  A delta around a query
+    or a DAG run counts the compiles the codegen cache did not
+    save."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()

@@ -161,6 +161,28 @@ def test_delete_keys(spark, tmp_path):
     delete_keys(spark, str(tmp_path / "missing"), keys, ["k"])
 
 
+def test_keyed_writers_keep_stored_column_order(spark, tmp_path):
+    """A join USING keys moves the key columns first; the merge and
+    delete rewrites must still store the table's own column order,
+    or every nightly re-run reshuffles app tables' columns."""
+    path = str(tmp_path / "t")
+    schema = "year int, amount double, category string, version int"
+    spark.createDataFrame([(2025, 1.0, "REC", 1), (2025, 2.0, "PPA", 1)],
+                          schema).write.parquet(path)
+    keys = ["category", "year", "version"]
+    order = ["year", "amount", "category", "version"]
+    for amount in (5.0, 6.0):
+        W.replace_keys(spark.createDataFrame([(2025, amount, "REC", 1)],
+                                             schema), path, keys=keys)
+        assert spark.read.parquet(path).columns == order
+    W.delete_keys(spark, path, spark.createDataFrame(
+        [("PPA", 2025, 1)], "category string, year int, version int"),
+        keys)
+    got = spark.read.parquet(path)
+    assert got.columns == order
+    assert [tuple(r) for r in got.collect()] == [(2025, 6.0, "REC", 1)]
+
+
 def test_swap_crash_between_renames_is_recoverable(spark, tmp_path):
     """Simulated crash AFTER path->retired but BEFORE tmp->path: the
     table dir is missing and .__retired__ holds the only copy.  The
