@@ -717,14 +717,11 @@ def count_keys_all_versions(spark: SparkSession, table_dir: str,
     """Erasure verification: per readable version, how many rows
     still match ``values`` -- the audit a DPO runs after
     :func:`purge_keys_history` (all-zero = forgotten).  Scans only
-    the stats-pruned candidate files of each version, and all
-    versions in ONE Spark job: shared candidate files are scanned
-    ONCE -- files group by their version-MEMBERSHIP signature, each
-    group explodes a literal version array (r16; the prior union
-    shape re-read a file once per referencing version, ~Nx the I/O
-    on a 100-version append history) -- then one count keyed by the
-    exploded version.  Versions whose schema or subject-column
-    logical name differ read in their own group."""
+    the stats-pruned candidate files of each version -- one scan per
+    version, a shared file read once per referencing version -- and
+    all versions in ONE Spark job: one count keyed by version.  Each
+    version filters on its own logical name for the subject column;
+    a version whose schema or files lack it counts zero."""
     from pyspark.sql import functions as F
 
     backend = backend or _DEFAULT_BACKEND
@@ -737,65 +734,22 @@ def count_keys_all_versions(spark: SparkSession, table_dir: str,
     phys = _key_physical(table_dir, versions, key, key_version)
     logicals = _key_logicals(table_dir, versions, phys)
     out: dict[int, int] = {n: 0 for n in versions}
-    # group versions by (pinned schema, logical key name); within a
-    # group every shared candidate file scans once
-    groups: dict[tuple, list[int]] = {}
-    sts: dict[int, object] = {}
+    frames = []
     for n in versions:
-        if not per_version[n]:
-            continue
         # the version's OWN logical name for the subject column
         # (renames change it); None = column absent from that
         # version's schema, so no row can match
         k_n = logicals[n]
-        if k_n is None:
+        if not per_version[n] or k_n is None:
             continue
-        st = table_schema(table_dir, n)
-        if st is not None and k_n not in st.fieldNames():
-            continue  # pre-evolution version: all-NULL, never matches
-        sts[n] = st
-        sj = st.json() if st is not None else None
-        groups.setdefault((sj, k_n), []).append(n)
-    from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-        READ_DEDUP_MIN_BYTES,
-    )
-
-    min_dup = int(os.environ.get("SPARK_GRAFT_READ_DEDUP_MIN_BYTES",
-                                 READ_DEDUP_MIN_BYTES))
-    frames = []
-    for (_sj, k_n), vs in groups.items():
-        membership: dict[str, list[int]] = {}
-        for n in vs:
-            for f in per_version[n]:
-                membership.setdefault(f, []).append(n)
-        dup_bytes = 0
-        for f, fvs in membership.items():
-            if len(fvs) > 1:
-                try:
-                    size = os.path.getsize(os.path.join(table_dir, f))
-                except OSError:
-                    size = 0
-                dup_bytes += (len(fvs) - 1) * size
-        if dup_bytes < min_dup:
-            # cost gate (see versioned.read_versions): tiny shared
-            # candidates re-read faster than the explode costs
-            for n in vs:
-                df = _read_files(spark, table_dir, per_version[n],
-                                 sts[n])
-                frames.append(df.filter(df[k_n].isin(vals))
-                                .select(F.lit(n).alias("__v")))
+        df = _read_files(spark, table_dir, per_version[n],
+                         table_schema(table_dir, n))
+        if k_n not in df.columns:
+            # pre-evolution version (pinned schema without the
+            # column) or a schema-less one whose files lack it
             continue
-        by_sig: dict[tuple, list[str]] = {}
-        for f, fvs in membership.items():
-            by_sig.setdefault(tuple(sorted(fvs)), []).append(f)
-        for sig in sorted(by_sig):
-            df = _read_files(spark, table_dir, sorted(by_sig[sig]),
-                             sts[vs[0]])
-            ver = (F.lit(int(sig[0])) if len(sig) == 1
-                   else F.explode(F.lit(list(sig))
-                                  .cast("array<int>")))
-            frames.append(df.filter(df[k_n].isin(vals))
-                            .select(ver.alias("__v")))
+        frames.append(df.filter(df[k_n].isin(vals))
+                        .select(F.lit(n).alias("__v")))
     if frames:
         u = frames[0]
         for f in frames[1:]:

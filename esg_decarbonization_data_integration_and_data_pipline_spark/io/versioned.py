@@ -740,7 +740,7 @@ def _strip_physical(st):
 
 
 def _read_files(spark: SparkSession, table_dir: str, rel_files,
-                st) -> DataFrame:
+                st, with_pos: bool = False) -> DataFrame:
     """THE schema-pinned file reader: read manifest-relative parquet
     files under pinned schema ``st``.  On a column-mapped table the
     scan runs under the PHYSICAL schema (the names the files carry)
@@ -758,7 +758,13 @@ def _read_files(spark: SparkSession, table_dir: str, rel_files,
     and partitioned commits inheriting each other) cannot share one
     discovery pass (Spark raises CONFLICTING_DIRECTORY_STRUCTURES),
     so files group by their partition-directory signature -- one
-    scan per layout shape, unioned under the pinned schema."""
+    scan per layout shape, unioned under the pinned schema.
+
+    ``with_pos`` adds the scan-generated row identity the deletion
+    vector readers key on: ``__dv_file`` (= ``_metadata.file_path``)
+    and ``__dv_pos`` (= ``_metadata.row_index``), projected straight
+    off each scan (the ``_metadata`` struct is only reachable
+    there)."""
     if not rel_files:
         # a zero-file version (e.g. a snapshot of a zero-partition
         # frame): the pinned schema IS the read, there is nothing to
@@ -770,7 +776,7 @@ def _read_files(spark: SparkSession, table_dir: str, rel_files,
         return spark.createDataFrame([], st)
     groups = _layout_groups(rel_files)
     frames = [_read_files_single(spark, table_dir, fs, st,
-                                 base_rel=base)
+                                 base_rel=base, with_pos=with_pos)
               for base, fs in groups]
     out = frames[0]
     for f in frames[1:]:
@@ -801,8 +807,11 @@ def _layout_groups(rel_files) -> list[tuple[str | None, list[str]]]:
 
 
 def _read_files_single(spark: SparkSession, table_dir: str,
-                       rel_files, st,
-                       base_rel: str | None) -> DataFrame:
+                       rel_files, st, base_rel: str | None,
+                       with_pos: bool = False) -> DataFrame:
+    """One scan of one layout group (see :func:`_read_files`)."""
+    from pyspark.sql import functions as F
+
     paths = [os.path.join(table_dir, f) for f in rel_files]
     reader = spark.read
     partitioned = base_rel is not None
@@ -810,12 +819,15 @@ def _read_files_single(spark: SparkSession, table_dir: str,
         reader = reader.option(
             "basePath",
             os.path.abspath(os.path.join(table_dir, base_rel)))
+    meta = ([F.col("_metadata.file_path").alias("__dv_file"),
+             F.col("_metadata.row_index").alias("__dv_pos")]
+            if with_pos else [])
     if st is None:
-        return reader.parquet(*paths)
-    from pyspark.sql import functions as F
-
+        df = reader.parquet(*paths)
+        return (df.select([F.col(c) for c in df.columns] + meta)
+                if with_pos else df)
     pmap = _physical_map(st)
-    if not pmap:
+    if not pmap and not with_pos:
         df = reader.schema(st).parquet(*paths)
         return (df.select([F.col(f.name) for f in st.fields])
                 if partitioned else df)
@@ -826,53 +838,11 @@ def _read_files_single(spark: SparkSession, table_dir: str,
         for f in st.fields])
     df = reader.schema(phys_st).parquet(*paths)
     return df.select([F.col(pmap.get(f.name, f.name)).alias(f.name)
-                      for f in st.fields])
-
-
-def _read_files_with_pos(spark: SparkSession, table_dir: str,
-                         rel_files, st) -> DataFrame:
-    """:func:`_read_files` plus the scan-generated row identity:
-    ``__dv_file`` (= ``_metadata.file_path``) and ``__dv_pos``
-    (= ``_metadata.row_index``) -- the coordinates deletion vectors
-    anti-filter on.  One projection straight off the scan (the
-    ``_metadata`` struct is only reachable there)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField, StructType
-
-    groups = _layout_groups(rel_files)
-    frames = []
-    for base, fs in groups:
-        paths = [os.path.join(table_dir, f) for f in fs]
-        reader = spark.read
-        if base is not None:
-            reader = reader.option(
-                "basePath",
-                os.path.abspath(os.path.join(table_dir, base)))
-        meta = [F.col("_metadata.file_path").alias("__dv_file"),
-                F.col("_metadata.row_index").alias("__dv_pos")]
-        if st is None:
-            df = reader.parquet(*paths)
-            frames.append(
-                df.select([F.col(c) for c in df.columns] + meta))
-            continue
-        pmap = _physical_map(st)
-        phys_st = StructType([
-            StructField(pmap.get(f.name, f.name), f.dataType, True)
-            for f in st.fields])
-        df = reader.schema(phys_st).parquet(*paths)
-        frames.append(df.select(
-            [F.col(pmap.get(f.name, f.name)).alias(f.name)
-             for f in st.fields] + meta))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
+                      for f in st.fields] + meta)
 
 
 def _read_files_dv(spark: SparkSession, table_dir: str, n: int,
-                   rel_files, st,
-                   dvs: dict[str, tuple[str, int]] | None = None
-                   ) -> DataFrame:
+                   rel_files, st) -> DataFrame:
     """THE version-aware file reader: :func:`_read_files`, minus the
     rows version ``n``'s deletion vectors mark deleted.  Files
     without a DV take the plain scan; dv-bearing files scan with row
@@ -881,7 +851,7 @@ def _read_files_dv(spark: SparkSession, table_dir: str, n: int,
     control-plane sized by contract: a delete touching a large
     fraction of the table should be :func:`delete_keys_version`'s
     copy-on-write rewrite instead)."""
-    dvs = _read_dvs(table_dir, n) if dvs is None else dvs
+    dvs = _read_dvs(table_dir, n)
     files = list(rel_files)
     hit = [f for f in files if f in dvs]
     if not hit:
@@ -897,12 +867,10 @@ def _read_files_dv(spark: SparkSession, table_dir: str, n: int,
         hit = [f for f in files if f in dvs]
         if not hit:
             return _read_files(spark, table_dir, files, st)
-    from pyspark.sql import functions as F
-
     clean = [f for f in files if f not in dvs]
     masked = _apply_dv(
         spark, table_dir,
-        _read_files_with_pos(spark, table_dir, hit, st),
+        _read_files(spark, table_dir, hit, st, with_pos=True),
         {f: dvs[f] for f in hit})
     if not clean:
         return masked
@@ -911,20 +879,12 @@ def _read_files_dv(spark: SparkSession, table_dir: str, n: int,
 
 _DV_BROADCAST_ROWS = 4_000_000
 
-# read_versions cost gate: by-file dedup engages only when the
-# duplicated scan bytes (sum over files of (refs - 1) x size) exceed
-# this; below it the per-(version, file) union re-reads page-cached
-# data faster than the explode attribution costs (interleaved A/B,
-# r16).  Env-overridable (SPARK_GRAFT_READ_DEDUP_MIN_BYTES) so tests
-# and deployments can pin either path; both are result-identical.
-READ_DEDUP_MIN_BYTES = 256 * 1024 * 1024
-
 
 def _apply_dv(spark: SparkSession, table_dir: str,
               df_with_pos: DataFrame,
               dvs: dict[str, tuple[str, int]]) -> DataFrame:
-    """Anti-filter ``df_with_pos`` (a ``_read_files_with_pos`` frame)
-    against the given deletion vectors and drop the row-identity
+    """Anti-filter ``df_with_pos`` (a ``with_pos`` :func:`_read_files`
+    frame) against the given deletion vectors and drop the row-identity
     columns.  The (suffix-key, position) pairs frame is built
     driver-side through Arrow (positions are control-plane sized;
     manifest-recorded counts pick broadcast vs shuffle without
@@ -1149,23 +1109,57 @@ def _snapshot_meta(staged: str, rel_files, schema, stats_columns
     return stats, rowmeta
 
 
-def _read_stats(table_dir: str, n: int) -> dict[str, dict[str, tuple]]:
-    """relpath -> {col: (min, max)} recorded in ``v_n``'s manifest
-    (empty for snapshot versions and stats-less commits)."""
-    import json
-
+def _manifest(table_dir: str, n: int) -> dict[str, list[str]] | None:
+    """THE manifest reader: ONE read of ``v_n``'s ``_MANIFEST``, its
+    lines split by prefix -- ``""`` holds the data-file lines, each
+    metadata tag (``#txn ``, ``#stats ``, ``#rows ``, ``#base ``,
+    ``#op ``, ``#dv ``) the payloads after it, in file order; blank
+    lines and unknown ``#`` tags are skipped.  None for a snapshot
+    version (no manifest: the dir's own files ARE the version --
+    :func:`write_version`'s layout).  Every manifest accessor
+    decodes from this."""
     p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
     try:
         with open(p, encoding="ascii") as fh:
             raw = fh.read()
     except OSError:
-        return {}
-    out: dict[str, dict[str, tuple]] = {}
+        return None
+    out: dict[str, list[str]] = {
+        t: [] for t in ("", _TXN_PREFIX, _STATS_PREFIX, _ROWS_PREFIX,
+                        _BASE_PREFIX, _OP_PREFIX, _DV_PREFIX)}
     for line in raw.splitlines():
-        if line.startswith(_STATS_PREFIX):
-            rec = json.loads(line[len(_STATS_PREFIX):])
-            out.setdefault(rec["f"], {})[rec["c"]] = (rec["lo"], rec["hi"])
+        if not line.strip():
+            continue
+        if not line.startswith("#"):
+            out[""].append(line)
+            continue
+        tag, sp, payload = line.partition(" ")
+        if tag + sp in out:
+            out[tag + sp].append(payload)
     return out
+
+
+def _stats_of(mf: dict[str, list[str]]) -> dict[str, dict[str, tuple]]:
+    import json
+
+    out: dict[str, dict[str, tuple]] = {}
+    for rec in map(json.loads, mf[_STATS_PREFIX]):
+        out.setdefault(rec["f"], {})[rec["c"]] = (rec["lo"], rec["hi"])
+    return out
+
+
+def _rowmeta_of(mf: dict[str, list[str]]) -> dict[str, dict]:
+    import json
+
+    return {rec["f"]: {"n": rec["n"], "nn": rec.get("nn", {})}
+            for rec in map(json.loads, mf[_ROWS_PREFIX])}
+
+
+def _read_stats(table_dir: str, n: int) -> dict[str, dict[str, tuple]]:
+    """relpath -> {col: (min, max)} recorded in ``v_n``'s manifest
+    (empty for snapshot versions and stats-less commits)."""
+    mf = _manifest(table_dir, n)
+    return _stats_of(mf) if mf is not None else {}
 
 
 def _version_meta(table_dir: str, n: int
@@ -1176,28 +1170,10 @@ def _version_meta(table_dir: str, n: int
     DataSource pushdown reader opens the manifest once instead of
     three times per read).  Falls back to the snapshot-dir listing
     (no stats/rowmeta) exactly like ``_data_files``."""
-    import json
-
-    mf = _read_manifest(table_dir, n)
+    mf = _manifest(table_dir, n)
     if mf is None:
         return _data_files(table_dir, n), {}, {}
-    stats: dict[str, dict[str, tuple]] = {}
-    rows: dict[str, dict] = {}
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            raw = fh.read()
-    except OSError:
-        return mf[0], {}, {}
-    for line in raw.splitlines():
-        if line.startswith(_STATS_PREFIX):
-            rec = json.loads(line[len(_STATS_PREFIX):])
-            stats.setdefault(rec["f"], {})[rec["c"]] = (rec["lo"],
-                                                        rec["hi"])
-        elif line.startswith(_ROWS_PREFIX):
-            rec = json.loads(line[len(_ROWS_PREFIX):])
-            rows[rec["f"]] = {"n": rec["n"], "nn": rec.get("nn", {})}
-    return mf[0], stats, rows
+    return mf[""], _stats_of(mf), _rowmeta_of(mf)
 
 
 def _stats_lines(stats: dict[str, dict[str, tuple]]) -> list[str]:
@@ -1318,18 +1294,11 @@ def _read_dvs(table_dir: str, n: int) -> dict[str, tuple[str, int]]:
     in ``v_n``'s manifest (empty for snapshots / dv-less versions)."""
     import json
 
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            raw = fh.read()
-    except OSError:
+    mf = _manifest(table_dir, n)
+    if mf is None:
         return {}
-    out: dict[str, tuple[str, int]] = {}
-    for line in raw.splitlines():
-        if line.startswith(_DV_PREFIX):
-            rec = json.loads(line[len(_DV_PREFIX):])
-            out[rec["f"]] = (rec["d"], int(rec["n"]))
-    return out
+    return {rec["f"]: (rec["d"], int(rec["n"]))
+            for rec in map(json.loads, mf[_DV_PREFIX])}
 
 
 def _read_op(table_dir: str, n: int) -> dict | None:
@@ -1337,15 +1306,10 @@ def _read_op(table_dir: str, n: int) -> dict | None:
     (legacy manifest / snapshot version)."""
     import json
 
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            for line in fh:
-                if line.startswith(_OP_PREFIX):
-                    return json.loads(line[len(_OP_PREFIX):])
-    except OSError:
+    mf = _manifest(table_dir, n)
+    if mf is None or not mf[_OP_PREFIX]:
         return None
-    return None
+    return json.loads(mf[_OP_PREFIX][0])
 
 
 def _op_line(name: str, params: dict | None = None,
@@ -1412,20 +1376,8 @@ def _file_rowmeta(path: str, columns) -> dict:
 def _read_rowmeta(table_dir: str, n: int) -> dict[str, dict]:
     """relpath -> {"n": rows, "nn": {col: nulls}} recorded in
     ``v_n``'s manifest (empty for snapshots / pre-rows commits)."""
-    import json
-
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            raw = fh.read()
-    except OSError:
-        return {}
-    out: dict[str, dict] = {}
-    for line in raw.splitlines():
-        if line.startswith(_ROWS_PREFIX):
-            rec = json.loads(line[len(_ROWS_PREFIX):])
-            out[rec["f"]] = {"n": rec["n"], "nn": rec.get("nn", {})}
-    return out
+    mf = _manifest(table_dir, n)
+    return _rowmeta_of(mf) if mf is not None else {}
 
 
 def _rows_lines(rowmeta: dict[str, dict]) -> list[str]:
@@ -2003,44 +1955,21 @@ def read_where(spark: SparkSession, table_dir: str, col: str,
 def _read_manifest(table_dir: str,
                    n: int) -> tuple[list[str], set[str]] | None:
     """(data-file lines, txn ids) of ``v_n``'s manifest, or None for a
-    snapshot version (no ``_MANIFEST``: the dir's own files ARE the
-    version -- :func:`write_version`'s layout)."""
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            raw = fh.read()
-    except OSError:
-        return None
-    files: list[str] = []
-    txns: set[str] = set()
-    for line in raw.splitlines():
-        if not line.strip():
-            continue
-        if line.startswith(_TXN_PREFIX):
-            txns.add(line[len(_TXN_PREFIX):])
-        elif line.startswith("#"):
-            pass  # other metadata tiers (#stats ...) -- not data files
-        else:
-            files.append(line)
-    return files, txns
+    snapshot version."""
+    mf = _manifest(table_dir, n)
+    return (mf[""], set(mf[_TXN_PREFIX])) if mf is not None else None
 
 
 def _base_of(table_dir: str, n: int) -> int | None:
     """The version ``v_n`` is row-identical to (its compaction base),
     or None -- parsed from the manifest's #base line."""
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            raw = fh.read()
-    except OSError:
+    mf = _manifest(table_dir, n)
+    if mf is None or not mf[_BASE_PREFIX]:
         return None
-    for line in raw.splitlines():
-        if line.startswith(_BASE_PREFIX):
-            try:
-                return int(line[len(_BASE_PREFIX):].strip())
-            except ValueError:
-                return None
-    return None
+    try:
+        return int(mf[_BASE_PREFIX][0].strip())
+    except ValueError:
+        return None
 
 
 def _data_files(table_dir: str, n: int) -> list[str]:
@@ -3353,7 +3282,7 @@ def delete_keys_dv(spark: SparkSession, table_dir: str,
     if not touched:
         return None
     st = table_schema(table_dir, base)
-    scan = _read_files_with_pos(spark, table_dir, touched, st)
+    scan = _read_files(spark, table_dir, touched, st, with_pos=True)
     matched = scan.join(match_keys, key, "left_semi") \
                   .select("__dv_file", "__dv_pos")
     return _dv_delete_commit(spark, table_dir, matched, touched,
@@ -3385,7 +3314,7 @@ def delete_where_dv(spark: SparkSession, table_dir: str, col: str,
     if not cand:
         return None
     st = table_schema(table_dir, base)
-    scan = _read_files_with_pos(spark, table_dir, cand, st)
+    scan = _read_files(spark, table_dir, cand, st, with_pos=True)
     pred = F.lit(True)
     if lo is not None:
         pred = pred & (F.col(col) >= F.lit(lo))
@@ -4201,19 +4130,8 @@ def _read_resolved(spark: SparkSession, table_dir: str, n: int) -> DataFrame:
     # files predating an added column surface it as NULL, with NO
     # footer-merge pass over the (at scale, very long) file list --
     # the mergeSchema=true tax every read would otherwise pay
-    st = table_schema(table_dir, n)
-    mf = _read_manifest(table_dir, n)
-    if mf is None:
-        reader = spark.read.schema(st) if st is not None \
-            else spark.read
-        df = reader.parquet(os.path.join(table_dir, f"v_{n:08d}"))
-        if st is not None and df.columns != st.fieldNames():
-            # Hive-partitioned snapshot: partition discovery appends
-            # the partition columns last -- restore pinned order
-            from pyspark.sql import functions as F
-            df = df.select([F.col(f.name) for f in st.fields])
-        return df
-    return _read_files_dv(spark, table_dir, n, mf[0], st)
+    return _read_files_dv(spark, table_dir, n, _data_files(table_dir, n),
+                          table_schema(table_dir, n))
 
 
 def read_current(spark: SparkSession, table_dir: str,
@@ -4274,57 +4192,21 @@ def read_version(spark: SparkSession, table_dir: str, n: int,
 def read_versions(spark: SparkSession, table_dir: str, versions,
                   version_col: str = "__version",
                   backend: CommitBackend | None = None) -> DataFrame:
-    """Multi-version read with BY-FILE dedup: every physical data
-    file is scanned ONCE, not once per referencing version, and each
-    row is attributed to every version that contains it through a
-    broadcast (file-suffix -> versions) map + explode.  Returns the
-    versions' shared pinned schema prefixed with ``version_col``
-    (int); rows per version are identical to
-    ``read_version(n).withColumn(version_col, lit(n))``.
+    """Multi-version read: the union of
+    ``read_version(n).withColumn(version_col, lit(n))`` over
+    ``versions``, ONE lazy frame (so a multi-version audit runs one
+    Spark job), with ``version_col`` (int) first and the versions'
+    shared pinned schema after it.  Each version scans its own file
+    list -- a file shared by several versions is read once per
+    referencing version -- and carries its own deletion-vector mask.
 
-    Why: the multi-version audits union per-version reads into one
-    job, and on a manifest-append history version N+1 re-lists every
-    file of version N -- a 3-version union read shared files three
-    times (~2x wasted scan I/O on append-heavy histories; the r15
-    round's top known gap).  Here the shuffle/aggregate volume above
-    the scan is unchanged (the explode emits exactly the rows the
-    per-version union emitted), but each file's bytes are read and
-    decoded once.
-
-    How: files group by their version-MEMBERSHIP signature (the
-    sorted tuple of referencing versions); each group scans once and
-    explodes a LITERAL version array -- no per-row file-path
-    decoding, no join (a first cut attributed via a broadcast
-    (_metadata.file_path-suffix -> versions) map, and the per-row
-    regexp+url_decode+join cost measurably exceeded the scan savings
-    on small inputs).  A multi-version group costs one
-    `explode(lit(array))` per row; a single-version group attaches
-    `lit(version)` directly.
-
-    Cost gate: the dedup only engages when the DUPLICATED bytes (sum
-    over files of (refs - 1) x file size) exceed
-    ``SPARK_GRAFT_READ_DEDUP_MIN_BYTES`` (default 256 MB).  Below it
-    -- small tables whose shared files sit in the page cache -- the
-    read keeps the r15 one-scan-per-(version, file) union, which
-    interleaved A/Bs floor ~10-20% faster there (the explode is pure
-    overhead when re-reading is ~free); above it the re-read I/O
-    dominates and each file scans once.  Both paths return identical
-    rows (pinned by tests/test_versioned_multiread.py), so the gate
-    is a cost decision, never a semantic one.
-
-    Scope guards (each falls back to correctness, never silently
-    misreads):
-    - every requested version must pin the SAME schema (field names,
-      types, and physical mapping); a schema-changing history raises
-      ``SchemaMismatchError`` -- callers group versions by schema
-      first (the :func:`read_version` semantics of "this version's
-      pinned schema drives its read" cannot hold across differing
-      schemas in one scan);
-    - a file carrying a DELETION VECTOR in some referencing version
-      reads through the per-version DV path for those versions (its
-      live row set differs by version); only DV-free attributions
-      share a scan.
-    """
+    Every requested version must pin the SAME schema (field names,
+    types and physical mapping); a schema-changing history raises
+    ``SchemaMismatchError`` -- callers group versions by schema first
+    (:func:`read_version`'s "this version's pinned schema drives its
+    read" cannot hold across differing schemas in one frame).
+    Duplicate or empty ``versions`` raise ``ValueError``; commit and
+    vacuum checks are :func:`read_version`'s."""
     from pyspark.sql import functions as F
 
     versions = list(versions)
@@ -4333,113 +4215,22 @@ def read_versions(spark: SparkSession, table_dir: str, versions,
     if len(set(versions)) != len(versions):
         raise ValueError(f"read_versions: duplicate versions in "
                          f"{versions}")
-    committed = committed_versions(table_dir, backend=backend)
-    if not committed:
-        raise FileNotFoundError(
-            f"{table_dir} has no committed version (_CURRENT missing)")
-    for n in versions:
-        if n not in committed:
-            raise ValueError(
-                f"version v_{n:08d} of {table_dir} was never "
-                f"committed (committed versions: {committed})")
-        if not os.path.isdir(os.path.join(table_dir, f"v_{n:08d}")):
-            raise FileNotFoundError(
-                f"version v_{n:08d} of {table_dir} was committed but "
-                f"has been vacuumed")
-
-    sts = {n: table_schema(table_dir, n) for n in versions}
-    st = sts[versions[0]]
-    ref_json = st.json() if st is not None else None
-    for n in versions[1:]:
-        other = sts[n].json() if sts[n] is not None else None
-        if other != ref_json:
+    frames = [read_version(spark, table_dir, n, backend=backend)
+              for n in versions]
+    sjs = [st.json() if st is not None else None
+           for st in (table_schema(table_dir, n) for n in versions)]
+    for n, sj in zip(versions, sjs):
+        if sj != sjs[0]:
             raise SchemaMismatchError(
                 f"read_versions needs one shared pinned schema; "
                 f"v_{versions[0]:08d} and v_{n:08d} of {table_dir} "
                 f"differ -- group versions by schema and read each "
                 f"group separately")
-
-    # membership signature -> files, for DV-free attributions;
-    # DV-bearing (version, file) pairs read through the masked path
-    membership: dict[str, list[int]] = {}
-    files_by_version: dict[int, list[str]] = {}
-    dv_per_version: dict[int, list[str]] = {}
-    dvs_by_version: dict[int, dict] = {}
-    for n in versions:
-        rel_files = _data_files(table_dir, n)
-        files_by_version[n] = rel_files
-        dvs = _read_dvs(table_dir, n)
-        dvs_by_version[n] = dvs
-        for f in rel_files:
-            if f in dvs:
-                dv_per_version.setdefault(n, []).append(f)
-            else:
-                membership.setdefault(f, []).append(n)
-
-    cols = ([F.col(version_col)] +
-            [F.col(f.name) for f in st.fields]) if st is not None \
-        else None
-    frames: list[DataFrame] = []
-
-    dup_bytes = 0
-    for f, vs in membership.items():
-        if len(vs) > 1:
-            try:
-                size = os.path.getsize(os.path.join(table_dir, f))
-            except OSError:
-                size = 0
-            dup_bytes += (len(vs) - 1) * size
-    min_dup = int(os.environ.get("SPARK_GRAFT_READ_DEDUP_MIN_BYTES",
-                                 READ_DEDUP_MIN_BYTES))
-    if dup_bytes < min_dup:
-        # cost gate: re-reading this little duplicated data is
-        # cheaper than the explode attribution -- keep the r15
-        # one-scan-per-(version, file) union
-        for n in versions:
-            f = (_read_files_dv(spark, table_dir, n,
-                                files_by_version[n], st,
-                                dvs=dvs_by_version[n])
-                 .withColumn(version_col,
-                             F.lit(int(n)).cast("int")))
-            frames.append(f.select(cols) if cols is not None else f)
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
-    by_sig: dict[tuple, list[str]] = {}
-    for f, vs in membership.items():
-        by_sig.setdefault(tuple(sorted(vs)), []).append(f)
-    for sig in sorted(by_sig):
-        grp = _read_files(spark, table_dir, sorted(by_sig[sig]), st)
-        ver = (F.lit(int(sig[0])).cast("int") if len(sig) == 1
-               else F.explode(F.lit(list(sig)).cast("array<int>")))
-        grp = grp.withColumn(version_col, ver)
-        frames.append(grp.select(cols) if cols is not None else grp)
-    for n in sorted(dv_per_version):
-        fs = dv_per_version[n]
-        masked = (_read_files_dv(
-                      spark, table_dir, n, fs, st,
-                      dvs={f: dvs_by_version[n][f] for f in fs})
-                  .withColumn(version_col,
-                              F.lit(int(n)).cast("int")))
-        frames.append(masked.select(cols) if cols is not None
-                      else masked)
-    if not frames:
-        # zero data files in every requested version: the pinned
-        # schema (+ version col) IS the read
-        if st is None:
-            raise ValueError(
-                f"read_versions: no data files and no pinned schema "
-                f"under {table_dir} -- nothing to derive a read from")
-        from pyspark.sql.types import IntegerType, StructField, StructType
-        empty_st = StructType(
-            [StructField(version_col, IntegerType(), False)]
-            + list(st.fields))
-        return spark.createDataFrame([], empty_st)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
+    out = None
+    for n, df in zip(versions, frames):
+        df = df.select(F.lit(int(n)).cast("int").alias(version_col),
+                       *[c for c in df.columns if c != version_col])
+        out = df if out is None else out.unionByName(df)
     return out
 
 
@@ -4473,7 +4264,7 @@ def _dv_change_rows(spark: SparkSession, table_dir: str, st,
              .withColumn("_change_type", F.lit("insert")))
     if not affected:
         return empty
-    scan = (_read_files_with_pos(spark, table_dir, affected, st)
+    scan = (_read_files(spark, table_dir, affected, st, with_pos=True)
             .withColumn("__dv_key", _dv_key_col()))
     import pandas as pd
 

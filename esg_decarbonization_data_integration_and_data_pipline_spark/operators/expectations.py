@@ -184,12 +184,12 @@ def report(df: DataFrame, checks: list[Check],
     ``group`` (r16): report PER VALUE of an existing column instead
     of over the whole frame -- the output gains that column and every
     check row repeats per group.  This is what lets a multi-version
-    audit run ONE by-file-deduped scan (io/versioned.read_versions)
-    and still get per-version rows: same aggregate tree, keyed by the
-    version column.  Note groupBy drops empty groups, so a group with
-    ZERO rows yields no rows here (callers synthesize the empty-input
-    report -- 0 violations / 0 rows / passed -- per absent group;
-    check_table_versions does)."""
+    audit run ONE job over a multi-version frame
+    (io/versioned.read_versions) and still get per-version rows: same
+    aggregate tree, keyed by the version column.  Note groupBy drops
+    empty groups, so a group with ZERO rows yields no rows here
+    (callers synthesize the empty-input report -- 0 violations / 0
+    rows / passed -- per absent group; check_table_versions does)."""
     if not checks:
         raise ValueError("no checks declared")
     labels = [c.label for c in checks]
@@ -476,16 +476,14 @@ def check_table_versions(spark, table_dir: str, checks: list[Check],
     ONE Spark job with a single collect, instead of paying a
     job-scheduling round per version (r15; an N-version audit's
     collect latency was N x one control-plane fetch for O(#checks)
-    rows per version).  r16: within each same-schema version group
-    the scan half reads through :func:`read_versions` -- every
-    physical file scanned ONCE and attributed to its referencing
-    versions -- so an N-version audit over a manifest-append history
-    no longer re-reads shared files N times (the grouped
-    :func:`report` keys the same aggregate tree by the version
-    column).  Rows per version are identical to calling
-    check_table(n=v) -- check_table itself delegates here."""
+    rows per version).  Within each same-schema version group the
+    scan half reads through :func:`read_versions` and the grouped
+    :func:`report` keys one aggregate tree by the version column.
+    Errors from the read propagate.  Rows per version are identical
+    to calling check_table(n=v) -- check_table itself delegates
+    here."""
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-        RANGE_STAT_KINDS, read_version, read_versions, table_schema,
+        RANGE_STAT_KINDS, read_versions, table_schema,
     )
 
     if not checks:
@@ -527,31 +525,18 @@ def check_table_versions(spark, table_dir: str, checks: list[Check],
         if scan:
             scan_by_ver[n] = scan
         rows_by_ver[n] = rows
-    # group the scan halves by pinned schema (within one group the
-    # routing -- and so the scan check list -- is identical) and read
-    # each group through the by-file-deduped multi-version reader
+    # group the scan halves by pinned schema (the key read_versions
+    # checks, so it cannot raise SchemaMismatchError here; within a
+    # group the routing, and so the scan check list, is identical)
+    # and read each group as one multi-version frame
     groups: dict[str | None, list[int]] = {}
     for n in scan_by_ver:
         sj = st_by_ver[n].json() if st_by_ver[n] is not None else None
         groups.setdefault(sj, []).append(n)
-    scan_frames: list[DataFrame] = []
-    for vs in groups.values():
-        scan = scan_by_ver[vs[0]]
-        try:
-            rv = read_versions(spark, table_dir, vs,
-                               backend=backend)
-            scan_frames.append(report(rv, scan, group="__version"))
-        except RuntimeError:
-            # safety valve: any multi-version resolution surprise
-            # (e.g. a SchemaMismatchError from a history whose pinned
-            # schemas differ in ways the json-grouping above did not
-            # capture) falls back to the r15 per-version union --
-            # slower, never wrong
-            for n in vs:
-                scan_frames.append(
-                    report(read_version(spark, table_dir, n,
-                                        backend=backend), scan)
-                    .withColumn("__version", F.lit(int(n))))
+    scan_frames = [
+        report(read_versions(spark, table_dir, vs, backend=backend),
+               scan_by_ver[vs[0]], group="__version")
+        for vs in groups.values()]
     if scan_frames:
         for r in reduce(DataFrame.unionByName, scan_frames).collect():
             d = r.asDict()

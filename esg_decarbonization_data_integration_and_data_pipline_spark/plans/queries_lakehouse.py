@@ -379,10 +379,8 @@ def ddl_timetravel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return {"td": td, "dirs": (td,)}
 
     td = audit_state("ddl_timetravel", sf_dir, build)["td"]
-    # r16: the five per-version aggregates still run as ONE Spark
-    # job, but within each same-schema version group the read goes
-    # through read_versions -- shared physical files scan once (the
-    # unioned shape re-read v1's file in v1, v2, v3 and v5; the
+    # the five per-version aggregates run as ONE Spark job: each
+    # same-schema version group reads through read_versions (the
     # drop-columns commit v4 reads in its own schema group).  The
     # schema pinning (column count, exact comma-joined names) stays
     # a driver-side metadata read of each version's pinned schema.
@@ -703,11 +701,9 @@ def clone_divergence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return {"dirs": [src, dst], "src": src, "dst": dst}
 
     st = audit_state("clone_divergence", sf_dir, build)
-    # r16: each table's per-version aggregates read through
-    # read_versions -- physical files shared by several versions
-    # (the source's append chain; the clone's untouched files across
-    # its two versions, including the ``../``-external refs a
-    # shallow clone holds) scan ONCE and attribute by version
+    # each table's per-version aggregates read through read_versions
+    # -- one frame per table, grouped by version (the clone's reads
+    # include the ``../``-external refs a shallow clone holds)
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import read_versions
     probes = [
         read_versions(spark, td, vers, version_col="v")
@@ -903,11 +899,9 @@ def rename_column_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bloom_point_lookup r12 pattern); schema pinning (column count,
     # exact comma-joined names incl. order) stays a driver-side read
     # of each version's pinned schema, and count_where stays the
-    # graded metadata+boundary path per version.  r16: within each
-    # same-schema version group the read goes through read_versions
-    # -- shared physical files scan once (the pre-rename group
-    # re-read v1's file three times, the post-rename group v3's
-    # files twice)
+    # graded metadata+boundary path per version.  Each same-schema
+    # version group (pre-rename, post-rename) reads through
+    # read_versions
     versions = (1, 2, 3, 4, 5)
     sts = {v: table_schema(td, v) for v in versions}
     schemas = {v: sts[v].fieldNames() for v in versions}
@@ -1021,12 +1015,8 @@ def dv_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the six versioned reads union into ONE Spark job (the
     # bloom_point_lookup r12 pattern) -- each version still plans its
     # own manifest + DV anti-filter; table_rowcount stays a pure
-    # driver-side metadata walk (zero jobs).  r16: the six reads go
-    # through read_versions -- every DV-free physical file is
-    # scanned ONCE and attributed to its referencing versions (the
-    # unioned shape re-read files shared by N versions N times);
-    # DV-bearing (version, file) pairs keep the per-version masked
-    # path, since their live row sets differ by version
+    # driver-side metadata walk (zero jobs).  The six reads go
+    # through read_versions, one frame grouped by version
     u = (read_versions(spark, td, (1, 2, 3, 4, 5, 6),
                        version_col="version")
          .select("version", "o_orderkey", "o_totalprice"))
@@ -1284,11 +1274,9 @@ def merge_clauses_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     td = audit_state("merge_clauses", sf_dir, build)["td"]
     # the four version read-backs run as ONE unioned Spark job (r15;
-    # previously one collect round-trip per version).  r16: within
-    # each same-schema version group the read goes through
-    # read_versions, so files untouched by a merge commit scan once
-    # across the versions that share them (the v4 schema-evolution
-    # commit reads in its own group)
+    # previously one collect round-trip per version).  Each
+    # same-schema version group reads through read_versions (the v4
+    # schema-evolution commit reads in its own group)
     versions = (1, 2, 3, 4)
     sts = {v: table_schema(td, v) for v in versions}
     groups: dict[str, list[int]] = {}
@@ -1426,9 +1414,9 @@ def ndv_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     td = audit_state("ndv_audit", sf_dir, build)["td"]
     # the three exact-distinct anchor jobs union into ONE Spark job
-    # (r15); the nine register merges stay zero-job metadata.  r16:
-    # the anchors read through read_versions -- shared files scan
-    # once, one grouped multi-distinct agg
+    # (r15); the nine register merges stay zero-job metadata.  The
+    # anchors read through read_versions: one grouped multi-distinct
+    # agg
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import read_versions
 
     exact_by_v = {r["v"]: r for r in (
@@ -1572,8 +1560,8 @@ def histogram_quantile_audit(spark: SparkSession,
 
     # the three exact-in-range anchor jobs union into ONE Spark job
     # (r15); the eighteen quantile/range walks stay zero-job
-    # metadata.  r16: the anchors read through read_versions --
-    # shared files (v1's subset of v2) scan once, one grouped agg
+    # metadata.  The anchors read through read_versions: one
+    # grouped agg
     exact_by_v = {r["v"]: r for r in (
         read_versions(spark, td, (1, 2, 3), version_col="v")
         .groupBy("v").agg(*[

@@ -1332,9 +1332,8 @@ def versioned_quarter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_version(o.filter(F.col("o_quarter") == q), table_dir,
                        txn=f"1997:q{q}")
     compact_table(spark, table_dir)
-    # r16: the four versions read through read_versions -- q1's file
-    # is referenced by v1, v2 and v3 but scans once (the compacted v4
-    # has its own files), one grouped agg instead of four
+    # the four versions read through read_versions: one grouped agg
+    # instead of four
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import read_versions
     return (read_versions(spark, table_dir, (1, 2, 3, 4),
                           version_col="version")

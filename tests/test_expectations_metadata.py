@@ -210,7 +210,7 @@ def test_check_table_versions_matches_per_version_calls(spark,
 
 def test_check_table_versions_dedup_dv_schema_and_empty(spark,
                                                         tmp_path):
-    """r16: the by-file-deduped scan half must return the exact
+    """r16: the multi-version scan half must return the exact
     per-version rows across the awkward histories -- a deletion-
     vector version (per-version row masks over shared files), a
     schema-changing commit (splits the read into schema groups), and
@@ -261,3 +261,22 @@ def test_check_table_versions_dedup_dv_schema_and_empty(spark,
     assert got_e[5] == E.check_table(spark, t, suite_all, n=5)
     assert got_e[5][0]["n_rows"] == 0
     assert got_e[5][0]["passed"] is True
+
+
+def test_check_table_versions_propagates_read_errors(spark, tmp_path,
+                                                     monkeypatch):
+    """A failing multi-version read surfaces to the caller -- no
+    silent per-version fallback swaps in a different plan."""
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io import versioned as V
+
+    t = str(tmp_path / "t")
+    append_version(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, cat string"),
+        t)
+
+    def boom(*_a, **_k):
+        raise RuntimeError("multi-version read failed")
+
+    monkeypatch.setattr(V, "read_versions", boom)
+    with pytest.raises(RuntimeError, match="multi-version read failed"):
+        E.check_table_versions(spark, t, [E.in_set("cat", ["a"])], (1,))

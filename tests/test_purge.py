@@ -142,6 +142,20 @@ def test_purge_skips_pre_evolution_files(spark, tmp_path):
     assert sorted((r.a, r.k) for r in rows) == [("only-a", None)]
 
 
+def test_count_keys_schemaless_version_without_key_counts_zero(
+        spark, tmp_path):
+    """A version with no pinned schema (pre-schema-pinning history)
+    whose files lack the subject column cannot match: it counts zero
+    instead of failing the whole audit on the missing column."""
+    t = str(tmp_path / "t")
+    append_version(
+        spark.createDataFrame([("only-a",)], "a string"), t)
+    append_version(_kv(spark, [(1, "b"), (2, "c")]).select("a", "k"),
+                   t, merge_schema=True)
+    os.remove(os.path.join(t, "v_00000001", "_SCHEMA.json"))
+    assert count_keys_all_versions(spark, t, "k", [1]) == {1: 0, 2: 1}
+
+
 def test_purge_rejects_bad_values(spark, tmp_path):
     t = _chain(spark, tmp_path)
     with pytest.raises(ValueError):
