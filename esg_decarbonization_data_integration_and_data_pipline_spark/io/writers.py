@@ -25,10 +25,12 @@ it (see ``month_partitioned``).
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def table_path(warehouse: str, schema: str, name: str) -> str:
@@ -73,12 +75,20 @@ def replace_range(df: DataFrame, path: str,
 def replace_keys(df: DataFrame, path: str, keys: Sequence[str],
                  partition_by: Sequence[str] = ()) -> None:
     """Upsert by natural key over plain parquet: keep old rows whose
-    key tuple does NOT appear in the batch (left_anti), union the
-    batch, rewrite. On Delta/Iceberg this maps to MERGE; on parquet
-    the merged data is written ONCE to a staging dir and then moved
-    into place with directory renames (metadata-only) -- no
-    write-read-write double materialization, which at 100 TB would be
-    2x full-table write amplification per upsert.
+    key tuple does NOT appear in the batch (left_anti), add the
+    batch, swap. On Delta/Iceberg this maps to MERGE; on parquet both
+    halves land in one staging dir that is then moved into place with
+    directory renames (metadata-only), so every row is written ONCE.
+
+    The batch is staged first and its key set is read back from the
+    stage: the batch plan runs once (deriving the keys from ``df``
+    would run it again for the anti join -- column pruning makes the
+    two subtrees differ, so Spark reuses no exchange), and the keys
+    that decide which old rows survive come from the very bytes the
+    swap publishes, so a nondeterministic batch cannot disagree with
+    itself.  Both writes cast to ``old.unionByName(df)``'s schema
+    (stored column order, widened types; analysis only, no job), so
+    the stage's files share one footer schema.
 
     When ``partition_by`` is set it must be a subset of ``keys``:
     partition columns outside the key tuple would let a batch row
@@ -105,24 +115,30 @@ def replace_keys(df: DataFrame, path: str, keys: Sequence[str],
         return
     tmp = path.rstrip("/") + ".__staging__"
     _rm(tmp)  # leftover from a crashed prior run
-    old = spark.read.parquet(path)
-    cols = old.columns
+    old = read_table(spark, path)
+    target = old.unionByName(df).schema
+    overwrite(_cast(df, target), tmp, partition_by)  # the batch, once
+    staged = spark.read.schema(target).parquet(tmp)
     if partition_by:
         # prune the merge to the partitions present in the batch;
         # untouched partitions are never read or rewritten
-        pvals = df.select(*partition_by).distinct()
+        pvals = staged.select(*partition_by).distinct()
         old = old.join(F.broadcast(pvals), list(partition_by), "left_semi")
-    # a join USING keys moves the key columns first and unionByName
-    # keeps the left side's order: restore the stored column order
-    keep = (old.join(df.select(*keys).distinct(), list(keys), "left_anti")
-            .select(*cols))
-    merged = keep.unionByName(df)
-    overwrite(merged, tmp, partition_by)  # the one data write
+    keep = old.join(staged.select(*keys).distinct(), list(keys), "left_anti")
+    append(_cast(keep, target), tmp, partition_by)  # the surviving rows
     if partition_by:
         _swap_partition_dirs(tmp, path, len(partition_by))
         _rm(tmp)
     else:
         swap_into_place(tmp, path)
+
+
+def _cast(df: DataFrame, schema: StructType) -> DataFrame:
+    """``df`` in ``schema``'s column order, names and types (a join
+    USING keys moves the key columns first; this restores the stored
+    order too)."""
+    return df.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
+                       for f in schema])
 
 
 def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame,
@@ -152,7 +168,7 @@ def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame,
         return
     tmp = path.rstrip("/") + ".__staging__"
     _rm(tmp)
-    old = spark.read.parquet(path)
+    old = read_table(spark, path)
     keep = (old.join(keys_df.select(*keys).distinct(),
                      list(keys), "left_anti")
             .select(*old.columns))  # the join moved the keys first
@@ -166,9 +182,9 @@ def swap_into_place(tmp: str, path: str) -> None:
     implementation: replace_keys and the signature-index compaction
     both call it). Renames are metadata-only; a crash at any point
     leaves either the old table, the old table under ``.__retired__``
-    (healed by :func:`heal_swap`, which every keyed writer and
-    ``read_table`` run first), or the fully-committed new table --
-    never a half-written one.
+    (healed by :func:`heal_swap`, which every keyed writer runs
+    first; ``read_table`` never heals), or the fully-committed new
+    table -- never a half-written one.
 
     POSIX-ONLY CONTRACT (asserted): ``os.rename`` atomicity does not
     exist on object stores -- S3 "renames" are copy+delete and a
@@ -270,16 +286,66 @@ def _rm(path: str) -> None:
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    # Reads NEVER mutate the table dir.  Healing here looked
-    # convenient but cannot distinguish a crashed swap from a LIVE
-    # one: a reader racing a writer mid-swap would rename the
-    # retired dir back and make the writer's commit rename fail
-    # (ENOTEMPTY) -- turning "reader fails during a swap" (the
-    # documented raw-parquet contract) into "reader breaks the
-    # writer".  After a crash, recovery runs at any WRITER entry
-    # point (replace_keys/delete_keys/compaction) or via an explicit
-    # heal_swap(path) call.
-    return spark.read.parquet(path)
+    """Read a table the writers wrote, declaring the schema Spark
+    stored in its footer.  ``spark.read.parquet(path)`` without a
+    schema starts a one-task Spark job to read one footer; the same
+    footer read here on the driver starts none.  Partition columns
+    are still discovered from the directory names, exactly as before,
+    and a path with no data file reads as before, so Spark raises the
+    same error for it.
+
+    Reads NEVER mutate the table dir.  Healing here looked convenient
+    but cannot distinguish a crashed swap from a LIVE one: a reader
+    racing a writer mid-swap would rename the retired dir back and
+    make the writer's commit rename fail (ENOTEMPTY) -- turning
+    "reader fails during a swap" (the documented raw-parquet contract)
+    into "reader breaks the writer".  After a crash, recovery runs at
+    any WRITER entry point (replace_keys/delete_keys/compaction) or via
+    an explicit heal_swap(path) call."""
+    schema = _footer_schema(path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema in the footer of the file Spark's own schema
+    inference reads (``ParquetUtils.inferSchema``, mergeSchema off):
+    the first data file in full-path order, skipping what Spark's
+    file index skips -- names starting with ``_`` (unless a
+    ``col=value`` dir) or ``.``.  None when there is no data file."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    if "://" in path or path.startswith("file:"):
+        fs, root = pafs.FileSystem.from_uri(path)
+    else:
+        fs, root = pafs.LocalFileSystem(), os.path.abspath(path)
+    info = fs.get_file_info(root)
+    if info.type == pafs.FileType.File:
+        files = [root]
+    elif info.type == pafs.FileType.Directory:
+        files = [f.path for f in fs.get_file_info(
+                     pafs.FileSelector(root, recursive=True))
+                 if f.type == pafs.FileType.File and not any(
+                     (n.startswith("_") and "=" not in n)
+                     or n.startswith(".")
+                     for n in f.path[len(root):].split("/"))]
+    else:
+        files = []
+    if not files:
+        return None
+    first = min(files)
+    meta = pq.read_metadata(first, filesystem=fs).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        raise ValueError(
+            f"{first}: no Spark schema in the parquet footer (key "
+            f"{_SPARK_SCHEMA_KEY.decode()}); read_table reads tables "
+            f"Spark wrote -- read other parquet with spark.read")
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
 
 
 def month_partitioned(df: DataFrame, period_col: str = "period_start",

@@ -383,7 +383,7 @@ def minhash_verified_pairs(df: DataFrame, threshold: float,
                            n_bands: int = 4, id_col: str = "doc_id",
                            text_col: str = "text",
                            persist: bool | None = None,
-                           max_bucket: int | None = 512) -> DataFrame:
+                           max_bucket: int | None = 4096) -> DataFrame:
     """THE production near-dup plan: MinHash-band candidates verified
     with word-bigram-set Jaccard over the polynomial gram hashes.
     Pairwise work happens only inside LSH buckets, so cost is linear
@@ -413,21 +413,23 @@ def minhash_verified_pairs(df: DataFrame, threshold: float,
     repeatedly should clear the cache after materializing the
     result.
 
-    ``max_bucket`` (default 512, r16 -- was 4096): the banding skew
-    guard -- band buckets above this size are collapsed to star
-    edges around their min id before pairing (see
-    ``_band_candidates``), bounding the candidate term at m-1 per
-    degenerate bucket instead of m(m-1)/2.  512 was settled by a
-    duplicate-dense sweep (a 24x-replicated sf0.1 corpus, 120k docs,
-    max bucket 5928): the full query ran 227.7 s under the old 4096
-    cap vs 103.2 s under 512 -- the sub-cap quadratic term, up to
-    8.4M pairs from ONE 4096-doc bucket, dominated both the
+    ``max_bucket`` (default 4096): the banding skew guard -- band
+    buckets above this size are collapsed to star edges around their
+    min id before pairing (see ``_band_candidates``), bounding the
+    candidate term at m-1 per degenerate bucket instead of m(m-1)/2.
+    The default enumerates every bucket of up to 4096 documents
+    exactly, so a caller that does not choose a cap never loses
+    verified pairs from a bucket of that size.  The graded query
+    (``dedup_minhash_verified``) and the curation pipeline pass 512,
+    settled by a duplicate-dense sweep (a 24x-replicated sf0.1 corpus,
+    120k docs, max bucket 5928): the full query ran 227.7 s under a
+    4096 cap vs 103.2 s under 512 -- the sub-cap quadratic term, up
+    to 8.4M pairs from ONE 4096-doc bucket, dominated both the
     candidate count and the verify join.  The largest bucket in the
     real graded corpora is 247 (sf0.1; sf0.01: 28, sf0.001: 30), so
-    the guard still never fires there and graded results are
-    bit-identical,
-    which keeps BOTH the candidate broadcast and the pairwise verify
-    linear on boilerplate-heavy corpora. On healthy corpora no
+    neither cap fires there and graded results are bit-identical.
+    The guard keeps BOTH the candidate broadcast and the pairwise
+    verify linear on boilerplate-heavy corpora. On healthy corpora no
     bucket comes near the cap and results are bit-identical to the
     exact plan (the graded oracle runs with the guard ON). Under
     skew the guarded result is an APPROXIMATION of the exact

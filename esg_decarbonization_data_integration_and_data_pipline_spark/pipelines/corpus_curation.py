@@ -130,7 +130,8 @@ def curate(docs: DataFrame, keep_langs: list[str] | None = None,
     # corpus-sized block sets total (pre-gate kernels + post-gate
     # survivors); both freed on session GC.
     kept = kept.localCheckpoint()
-    pairs = minhash_verified_pairs(kept, threshold=near_dup_threshold)
+    pairs = minhash_verified_pairs(kept, threshold=near_dup_threshold,
+                                   max_bucket=512)
     clusters = dup_clusters(kept, pairs)
     # canonical pick as a per-cluster WINDOW (min (doc_id, text)
     # struct orders on doc_id): dup_clusters labels EVERY doc, so the

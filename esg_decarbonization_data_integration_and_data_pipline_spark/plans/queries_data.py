@@ -441,7 +441,7 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude cheaper than string arrays) -- pairwise work confined
     to LSH buckets (linear + candidate term; the 100 TB path)."""
     d = table(spark, sf_dir, "documents")
-    return D.minhash_verified_pairs(d, threshold=0.05)
+    return D.minhash_verified_pairs(d, threshold=0.05, max_bucket=512)
 
 
 @register("dedup_simhash", "ext:dedup-simhash", oracle="""

@@ -258,3 +258,70 @@ def test_delete_keys_heals_crashed_swap(spark, tmp_path):
     keys = spark.createDataFrame([(1,)], "k bigint")
     W.delete_keys(spark, path, keys, ["k"])
     assert [r.k for r in W.read_table(spark, path).collect()] == [2]
+
+
+def test_replace_keys_evaluates_the_batch_once(spark, tmp_path):
+    """The batch is staged first and its key set is read back from the
+    stage, so its plan runs once.  Deriving the keys from the batch
+    itself evaluated it twice -- once for the anti join, once for the
+    rows -- because column pruning leaves Spark no exchange to reuse."""
+    path = str(tmp_path / "t")
+    W.overwrite(_frame(spark, [("a", 1.0, "2023-01"), ("b", 2.0, "2023-01")]),
+                path)
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def site(s):
+        evaluated.add(1)
+        return s
+
+    batch = _frame(spark, [("b", 5.0, "2023-01"), ("c", 7.0, "2023-01")]) \
+        .withColumn("site", site("site"))
+    W.replace_keys(batch, path, keys=["site", "period_month"])
+    assert evaluated.value == 2, "each batch row must be computed once"
+    got = {r.site: r.amount for r in W.read_table(spark, path).collect()}
+    assert got == {"a": 1.0, "b": 5.0, "c": 7.0}
+
+
+def _job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_read_table_declares_the_footer_schema(spark, tmp_path):
+    """read_table starts no Spark job and returns the schema Spark's
+    inference would: non-nullable, decimal and both timestamp kinds
+    from the footer, the partition columns from the directory names."""
+    import decimal
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, decimal.Decimal("1.50"), dt.datetime(2024, 1, 1, 8),
+          dt.datetime(2024, 1, 1, 9), "a", 2023),
+         (2, None, None, None, "b", 2024)],
+        "k int not null, d decimal(12,2), ts timestamp, "
+        "ntz timestamp_ntz, site string, year int") \
+        .write.partitionBy("site", "year").parquet(path)
+    before = _job_id(spark)
+    df = W.read_table(spark, path)
+    assert _job_id(spark) == before, "read_table started a Spark job"
+    assert df.schema == spark.read.parquet(path).schema
+    assert sorted(map(tuple, df.collect())) == sorted(
+        map(tuple, spark.read.parquet(path).collect()))
+
+
+def test_read_table_rejects_parquet_without_a_spark_schema(spark, tmp_path):
+    """No silent fallback to inference: a file Spark did not write has
+    no stored Spark schema, and the error names it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    path = tmp_path / "t"
+    path.mkdir()
+    pq.write_table(pa.table({"k": [1, 2]}), str(path / "part-0.parquet"))
+    with pytest.raises(ValueError, match="part-0.parquet"):
+        W.read_table(spark, str(path))
+    # a table with no data file raises what spark.read.parquet raises
+    with pytest.raises(AnalysisException):
+        W.read_table(spark, str(tmp_path / "missing"))

@@ -98,3 +98,19 @@ def test_capped_bucket_report_logged(spark, caplog):
                                max_bucket=8).count()
     assert any("max_bucket=8" in r.message for r in caplog.records)
     spark.catalog.clearCache()
+
+
+def test_default_cap_enumerates_a_520_doc_bucket_exactly(spark):
+    """A band bucket of 520 identical docs sits above the graded
+    query's 512 cap but under the default 4096: a caller that does not
+    choose a cap gets the exact result, every pair verified, not 519
+    star edges with the rest silently dropped."""
+    docs = _planted(spark, m=520, distinct=2)
+    default = {(r.id_a, r.id_b, r.jaccard) for r in
+               minhash_verified_pairs(docs, threshold=0.5).collect()}
+    exact = {(r.id_a, r.id_b, r.jaccard) for r in
+             minhash_verified_pairs(docs, threshold=0.5,
+                                    max_bucket=None).collect()}
+    assert len(exact) == 520 * 519 // 2
+    assert default == exact
+    spark.catalog.clearCache()
