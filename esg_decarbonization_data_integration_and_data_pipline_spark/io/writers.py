@@ -16,6 +16,10 @@ warehouse:
   on the key tuple + new rows (S7 key-tuple flavor, S9's per-site
   loop without the loop)
 
+``staged`` is no write policy but the jobs' helper for an
+intermediate with more than one consumer: written once, read back by
+each consumer.
+
 At 100 TB the partitioned policies touch only the affected partitions
 (partition pruning on read, dynamic overwrite on write); only
 ``replace_keys`` on an unpartitioned key requires a rewrite, which is
@@ -27,7 +31,8 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -88,7 +93,9 @@ def replace_keys(df: DataFrame, path: str, keys: Sequence[str],
     swap publishes, so a nondeterministic batch cannot disagree with
     itself.  Both writes cast to ``old.unionByName(df)``'s schema
     (stored column order, widened types; analysis only, no job), so
-    the stage's files share one footer schema.
+    the stage's files agree on column order and types.  Their footers
+    can still differ in nullability, which each write takes from its
+    own plan; Spark reads them under one schema either way.
 
     When ``partition_by`` is set it must be a subset of ``keys``:
     partition columns outside the key tuple would let a batch row
@@ -124,7 +131,9 @@ def replace_keys(df: DataFrame, path: str, keys: Sequence[str],
         # untouched partitions are never read or rewritten
         pvals = staged.select(*partition_by).distinct()
         old = old.join(F.broadcast(pvals), list(partition_by), "left_semi")
-    keep = old.join(staged.select(*keys).distinct(), list(keys), "left_anti")
+    # no distinct() on the key side: an anti join keeps the same rows
+    # whether or not it sees a key twice, and the dedup is a shuffle
+    keep = old.join(staged.select(*keys), list(keys), "left_anti")
     append(_cast(keep, target), tmp, partition_by)  # the surviving rows
     if partition_by:
         _swap_partition_dirs(tmp, path, len(partition_by))
@@ -145,7 +154,7 @@ def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame,
                 keys: Sequence[str],
                 partition_by: Sequence[str] = ()) -> None:
     """DELETE by key tuple over plain parquet: rewrite = old rows
-    anti-joined against ``keys_df`` (distinct key tuples), staged and
+    anti-joined against ``keys_df``'s key tuples, staged and
     renamed into place like every keyed writer.  The removal twin of
     ``replace_keys`` -- a snapshot-diff driven recompute needs both
     (merge the added/changed, delete the removed).  No-op when the
@@ -169,11 +178,34 @@ def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame,
     tmp = path.rstrip("/") + ".__staging__"
     _rm(tmp)
     old = read_table(spark, path)
-    keep = (old.join(keys_df.select(*keys).distinct(),
-                     list(keys), "left_anti")
+    keep = (old.join(keys_df.select(*keys), list(keys), "left_anti")
             .select(*old.columns))  # the join moved the keys first
     overwrite(keep, tmp, partition_by)
     swap_into_place(tmp, path)
+
+
+@contextmanager
+def staged(df: DataFrame, stage_path: str) -> Iterator[DataFrame]:
+    """Write ``df`` once to ``stage_path`` and yield it read back from
+    there, for a job that derives more than one output (or one output
+    and a scalar over it) from the same intermediate.  Every consumer
+    of the yielded frame scans the stage instead of running ``df``'s
+    plan again -- column pruning makes each consumer's copy of that
+    plan differ, so Spark reuses no exchange across them.  The read
+    declares ``df``'s schema, so it starts no inference job.
+
+    The stage is wiped on entry (a crashed prior run may have left it)
+    and removed on exit, also when the block raises.  Name it after an
+    output table, ``<table>.__shared__``, next to that table's
+    ``.__staging__``; like the keyed writers it takes local paths
+    only."""
+    _assert_local_fs(stage_path)
+    _rm(stage_path)
+    try:
+        overwrite(df, stage_path)
+        yield df.sparkSession.read.schema(df.schema).parquet(stage_path)
+    finally:
+        _rm(stage_path)
 
 
 def swap_into_place(tmp: str, path: str) -> None:

@@ -51,12 +51,13 @@ NGRAM_PARTITION_BYTES = 8 << 10
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Metadata-only size estimate of a frame -- the same optimizer
     statistic broadcast planning uses (file-footer sizes for parquet
-    scans); None when the private accessor is unavailable."""
+    scans); None when the frame has no JVM handle to ask (a Spark
+    Connect frame).  Any error of the planner itself raises."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
+        jdf = df._jdf
+    except AttributeError:
         return None
+    return int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def ensure_parallelism(df: DataFrame, key: Column,
@@ -75,10 +76,8 @@ def ensure_parallelism(df: DataFrame, key: Column,
     per partition, capped at the cluster parallelism.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        return df
+    # a plan with no file scan lists no files (n_files == 0 below)
+    n_files = len(df.inputFiles())
     if n_files >= target:
         return df
     size = plan_size_bytes(df)

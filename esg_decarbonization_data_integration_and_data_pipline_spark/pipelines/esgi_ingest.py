@@ -56,15 +56,28 @@ def esgi_to_raw(tables: dict[str, DataFrame],
     """tables: esgi_indicators(raw feed), plant_mapping(site, plant).
     Returns the two raw-layer outputs keyed by table name
     (electricity_total_decarb / renewable_energy_decarb)."""
+    return split_families(esgi_per_site(tables, plant_recode))
+
+
+def esgi_per_site(tables: dict[str, DataFrame],
+                  plant_recode: dict[str, str] | None = None) -> DataFrame:
+    """The site-month rollup both raw outputs are cut from: one row
+    per (site, period_start, family, category) with the summed
+    amount, unit and type.  A job writing both outputs stages it once
+    (``io.writers.staged``) and splits the stage."""
     norm = normalize_indicators(tables["esgi_indicators"],
                                 plant_recode or {})
     mapping = tables["plant_mapping"].select("site", "plant").distinct()
     sited = (norm.join(F.broadcast(mapping), "plant", "left")
                  .na.fill({"site": "UNKNOWN"}))
-    per_site = (sited.groupBy("site", "period_start", "family", "category")
-                     .agg(F.sum("amount").alias("amount"))
-                     .withColumn("unit", F.lit("度"))
-                     .withColumn("type", F.lit("wzs_esgi")))
+    return (sited.groupBy("site", "period_start", "family", "category")
+                 .agg(F.sum("amount").alias("amount"))
+                 .withColumn("unit", F.lit("度"))
+                 .withColumn("type", F.lit("wzs_esgi")))
+
+
+def split_families(per_site: DataFrame) -> dict[str, DataFrame]:
+    """``esgi_per_site``'s rows cut into the two raw-layer tables."""
     elec = (per_site.filter(F.col("family") == "electricity")
                     .select("site", "amount", "unit", "period_start", "type"))
     renew = (per_site.filter(F.col("family") == "renewable")

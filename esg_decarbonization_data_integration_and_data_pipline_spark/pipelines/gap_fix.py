@@ -79,6 +79,15 @@ def import_actual_elect(tables: dict[str, DataFrame],
     caller upserts with replace_keys on (year, [month,] site,
     category, version) mirroring the delete predicates (:402, :410).
     """
+    return actual_rows(stamp_actuals(tables, year), year)
+
+
+def stamp_actuals(tables: dict[str, DataFrame], year: int) -> DataFrame:
+    """The rows both target tables are derived from: the monthly
+    actuals plus the reconciled WIHK rows, each stamped with the
+    latest validated version's metadata (see ``import_actual_elect``
+    for ``tables``).  A job writing both tables stages it once
+    (``io.writers.staged``) and derives them from the stage."""
     wihk = reconcile_sources(tables["csr"], tables["esgi"])
     df = (tables["monthly"].select("site", "amount", "period_start")
           .unionByName(wihk.select("site", "amount", "period_start")))
@@ -104,9 +113,14 @@ def import_actual_elect(tables: dict[str, DataFrame],
                    .alias("sign_off_id"),
                   F.max("last_update_time").alias("last_update_time")))
 
-    stamped = (df.crossJoin(F.broadcast(stamp))
-                 .withColumn("category", F.lit("actual"))
-                 .withColumn("validate", F.lit(True)))
+    return (df.crossJoin(F.broadcast(stamp))
+              .withColumn("category", F.lit("actual"))
+              .withColumn("validate", F.lit(True)))
+
+
+def actual_rows(stamped: DataFrame,
+                year: int) -> tuple[DataFrame, DataFrame]:
+    """(month_rows, year_rows) of ``stamp_actuals``' rows."""
     month_rows = (stamped
                   .withColumn("year", F.year("period_start"))
                   .withColumn("month", F.month("period_start"))

@@ -97,8 +97,14 @@ def packaged_accounts(accounts: DataFrame, meter_group: DataFrame,
     """The full packaging stage: original per-meter rows + per-group
     rollup rows + per-group green_rate rows (reference
     jobs/staging_to_app.py:341-342 double append)."""
-    groups = build_meter_groups(meter_group, group_mapping)
-    packed = pack_meter_groups(accounts, groups)
+    return with_group_rows(accounts, pack_meter_groups(
+        accounts, build_meter_groups(meter_group, group_mapping)))
+
+
+def with_group_rows(accounts: DataFrame, packed: DataFrame) -> DataFrame:
+    """``accounts`` plus ``packed`` (``pack_meter_groups``' rollup)
+    and its green_rate rows.  ``packed`` is read twice here, so a job
+    stages it once (``io.writers.staged``) and passes the stage."""
     cols = ["site", "plant", "meter_code", "provider_name", "category1",
             "category2", "amount", "year", "month", "area"]
     return (accounts.select(*cols)

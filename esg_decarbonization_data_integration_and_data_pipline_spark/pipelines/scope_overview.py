@@ -33,6 +33,13 @@ def scope_overview(tables: dict[str, DataFrame], base_year: int) -> DataFrame:
     Output per (site, year): totals, scopes, renewable ratio, and
     pct-vs-base-year for market-based scope 2.
     """
+    return with_pct_vs_base(scope_by_year(tables), base_year)
+
+
+def scope_by_year(tables: dict[str, DataFrame]) -> DataFrame:
+    """Per (site, year): totals, scopes and renewable ratio -- the
+    rows ``scope_overview`` returns, before the base-year comparison
+    (see there for ``tables``)."""
     def yearly(name: str, df: DataFrame) -> DataFrame:
         return (df.groupBy("site", F.year("period_start").alias("year"))
                   .agg(F.sum("amount").alias(name)))
@@ -45,19 +52,25 @@ def scope_overview(tables: dict[str, DataFrame], base_year: int) -> DataFrame:
     coef = tables["carbon_coef"].select("site", "year", "coef")
     y = y.join(F.broadcast(coef), ["site", "year"], "left")
 
-    out = (y.withColumn("scope2_location",
-                        F.round(F.col("total") * F.col("coef") / 1000, 6))
-            .withColumn("scope2_market",
-                        F.round(F.greatest(
-                            F.col("total") - F.col("green") - F.col("solar"),
-                            F.lit(0.0)) * F.col("coef") / 1000, 6))
-            .withColumn("scope1",
-                        F.round(F.col("total") * F.col("coef") / 1000
-                                * F.lit(SCOPE1_FACTOR), 6))
-            .withColumn("renewable_ratio",
-                        F.round((F.col("green") + F.col("solar"))
-                                / F.nullif(F.col("total"), F.lit(0.0)), 6)))
+    return (y.withColumn("scope2_location",
+                         F.round(F.col("total") * F.col("coef") / 1000, 6))
+             .withColumn("scope2_market",
+                         F.round(F.greatest(
+                             F.col("total") - F.col("green") - F.col("solar"),
+                             F.lit(0.0)) * F.col("coef") / 1000, 6))
+             .withColumn("scope1",
+                         F.round(F.col("total") * F.col("coef") / 1000
+                                 * F.lit(SCOPE1_FACTOR), 6))
+             .withColumn("renewable_ratio",
+                         F.round((F.col("green") + F.col("solar"))
+                                 / F.nullif(F.col("total"), F.lit(0.0)), 6)))
 
+
+def with_pct_vs_base(out: DataFrame, base_year: int) -> DataFrame:
+    """``scope_by_year``'s rows with pct-vs-base-year for market-based
+    scope 2.  The base-year scalar is a second read of ``out``, so a
+    job stages ``out`` once (``io.writers.staged``) and passes the
+    stage, instead of planning ``scope_by_year`` twice in one query."""
     base = (out.filter(F.col("year") == base_year)
                .groupBy()
                .agg(F.sum("scope2_market").alias("base_scope2_market")))

@@ -6,6 +6,13 @@ parquet warehouse: ingest (ESGI normalize) -> raw, raw -> staging
 accounting) -- each stage reading what the previous stage wrote via
 the idempotent writers, with dependencies declared in the JobRegistry
 so independent stages run concurrently.
+
+A job whose outputs share an upstream computes it once: the shared
+frame is staged with ``W.staged`` and each output is derived from the
+stage.  The jobs call the two parts of each such pure function (the
+shared part and the derive part); ``esgi_to_raw``, ``scope_overview``
+and ``import_actual_elect`` compose them and stay importable from this
+module for callers that look them up here by name.
 """
 
 from __future__ import annotations
@@ -16,17 +23,21 @@ from pyspark.sql import SparkSession, functions as F
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.io import writers as W
 from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.decarb_path import decarb_path
-from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.gap_fix import import_actual_elect
+from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.gap_fix import (  # noqa: F401
+    actual_rows, import_actual_elect, stamp_actuals,
+)
 from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.transfer_suggest import (
     next_year_transfer_suggest,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.electricity_decarb import (
     electricity_decarb,
 )
-from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.esgi_ingest import esgi_to_raw
+from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.esgi_ingest import (  # noqa: F401
+    esgi_per_site, esgi_to_raw, split_families,
+)
 from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.run_all import JobRegistry
-from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.scope_overview import (
-    scope_overview,
+from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.scope_overview import (  # noqa: F401
+    scope_by_year, scope_overview, with_pct_vs_base,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.source_status import (
     source_status,
@@ -53,18 +64,25 @@ def build_warehouse_dag(warehouse: str, sources: dict, base_year: int,
     def p(schema: str, name: str) -> str:
         return W.table_path(warehouse, schema, name)
 
+    def shared(table: str) -> str:
+        """Stage dir of an intermediate the job writing ``table``
+        shares between its outputs (see ``W.staged``)."""
+        return table + ".__shared__"
+
     @reg.register("esgi_to_raw")
     def _ingest(spark: SparkSession, run_date: dt.date):
-        out = esgi_to_raw(
+        per_site = esgi_per_site(
             {"esgi_indicators": sources["esgi_indicators"],
              "plant_mapping": sources["plant_mapping"]},
             plant_recode=plant_recode)
-        W.replace_keys(out["electricity_total_decarb"],
-                       p("raw", "electricity_total_decarb"),
-                       keys=["site", "period_start"])
-        W.replace_keys(out["renewable_energy_decarb"],
-                       p("raw", "renewable_energy_decarb"),
-                       keys=["site", "category", "period_start"])
+        elec = p("raw", "electricity_total_decarb")
+        with W.staged(per_site, shared(elec)) as stage:
+            out = split_families(stage)
+            W.replace_keys(out["electricity_total_decarb"], elec,
+                           keys=["site", "period_start"])
+            W.replace_keys(out["renewable_energy_decarb"],
+                           p("raw", "renewable_energy_decarb"),
+                           keys=["site", "category", "period_start"])
 
     staging_deps = ["esgi_to_raw"]
     if validate:
@@ -104,13 +122,15 @@ def build_warehouse_dag(warehouse: str, sources: dict, base_year: int,
         staged = (W.read_table(spark, p("staging", "electricity_decarb"))
                   .filter("site <> 'ALL' AND bo <> 'ALL'")
                   .select("site", "amount", "period_start"))
-        out = scope_overview(
+        by_year = scope_by_year(
             {"elect_total": staged,
              "green": sources["green"],
              "solar": sources["solar"],
-             "carbon_coef": sources["carbon_coef"]},
-            base_year=base_year)
-        W.overwrite(out, p("app", "decarb_elec_overview"))
+             "carbon_coef": sources["carbon_coef"]})
+        overview = p("app", "decarb_elec_overview")
+        # the rows and the base-year scalar both read the stage
+        with W.staged(by_year, shared(overview)) as stage:
+            W.overwrite(with_pct_vs_base(stage, base_year), overview)
 
     # the confirm-status and forecast jobs join the DAG only when the
     # caller supplies their inputs (the reference's main() likewise
@@ -157,17 +177,21 @@ def build_warehouse_dag(warehouse: str, sources: dict, base_year: int,
                       .filter(F.year("period_start") == run_date.year)
                       .groupBy("site", "period_start")
                       .agg(F.sum("amount").alias("amount")))
-            month_rows, year_rows = import_actual_elect(
+            stamped = stamp_actuals(
                 {"monthly": staged,
                  "csr": sources["wihk_csr"],
                  "esgi": sources["wihk_esgi"],
                  "versions": sources["target_versions"]},
                 run_date.year)
-            W.replace_keys(month_rows, p("app", "elect_target_month"),
-                           keys=["year", "month", "site", "category",
-                                 "version"])
-            W.replace_keys(year_rows, p("app", "elect_target_year"),
-                           keys=["year", "site", "category", "version"])
+            month_table = p("app", "elect_target_month")
+            with W.staged(stamped, shared(month_table)) as stage:
+                month_rows, year_rows = actual_rows(stage, run_date.year)
+                W.replace_keys(month_rows, month_table,
+                               keys=["year", "month", "site", "category",
+                                     "version"])
+                W.replace_keys(year_rows, p("app", "elect_target_year"),
+                               keys=["year", "site", "category",
+                                     "version"])
 
     # meter-group packaging follows the green-account build the same
     # way the reference's staging_to_app monthly loop does
@@ -176,15 +200,18 @@ def build_warehouse_dag(warehouse: str, sources: dict, base_year: int,
         @reg.register("meter_group_packaging")
         def _packaging(spark: SparkSession, run_date: dt.date):
             from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.meter_groups import (
-                packaged_accounts,
+                build_meter_groups, pack_meter_groups, with_group_rows,
             )
-            out = packaged_accounts(sources["green_accounts"],
-                                    sources["meter_group"],
-                                    sources["meter_group_mapping"])
-            W.replace_keys(out, p("app", "green_elec_account_packaged"),
-                           keys=["site", "plant", "meter_code",
-                                 "category1", "category2", "year",
-                                 "month"])
+            accounts = sources["green_accounts"]
+            packed = pack_meter_groups(accounts, build_meter_groups(
+                sources["meter_group"], sources["meter_group_mapping"]))
+            packaged = p("app", "green_elec_account_packaged")
+            # the group rows and their green rates both read the stage
+            with W.staged(packed, shared(packaged)) as stage:
+                W.replace_keys(with_group_rows(accounts, stage), packaged,
+                               keys=["site", "plant", "meter_code",
+                                     "category1", "category2", "year",
+                                     "month"])
 
     # the transfer suggestion closes the nightly run (main.py:110)
     if "transfer_offers" in sources:

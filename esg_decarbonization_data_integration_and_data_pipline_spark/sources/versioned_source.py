@@ -2162,10 +2162,7 @@ def register(spark) -> None:
     ``spark.sql.python.filterPushdown.enabled`` so batch reads get
     the stats/bloom file pruning + executor-side row pre-filter
     (sessions registering the class directly keep the plain reader
-    until they set the conf themselves)."""
+    until they set the conf themselves).  A session that refuses the
+    conf raises here: a pushdown read on it would fail anyway."""
     spark.dataSource.register(VersionedTableDataSource)
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled",
-                       "true")
-    except Exception:  # noqa: BLE001 -- pushdown is an optimization
-        pass
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")

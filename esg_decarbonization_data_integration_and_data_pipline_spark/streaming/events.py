@@ -50,10 +50,13 @@ def read_event_stream(spark: SparkSession, path: str,
     footer-only metadata operation, no data scan -- then branch the
     same way the batch path does. An empty (not-yet-populated)
     directory cannot be sniffed; fall back to DEFAULT_EVENTS_SCHEMA
-    so the stream can still start before the first file lands.
+    so the stream can still start before the first file lands.  Any
+    other read error (an unreadable file, a failed unit sniff)
+    raises.
     Watermarks want TIMESTAMP (local-tz), not NTZ; the session runs
     UTC (session.py) so wall times equal the batch path.
     """
+    from pyspark.errors import AnalysisException
     from pyspark.sql.types import IntegerType, LongType
 
     from esg_decarbonization_data_integration_and_data_pipline_spark.tables import sniff_epoch_unit
@@ -67,7 +70,9 @@ def read_event_stream(spark: SparkSession, path: str,
         # pin the unit here from the same files the stream will read
         if isinstance(loaded_schema["ts"].dataType, (LongType, IntegerType)):
             epoch_expr = sniff_epoch_unit(batch)
-    except Exception:  # no files yet -> schema inference impossible
+    except AnalysisException as e:  # no files yet: nothing to sniff
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
         loaded_schema = DEFAULT_EVENTS_SCHEMA
     reader = spark.readStream.schema(loaded_schema)
     if max_files_per_trigger:

@@ -325,3 +325,74 @@ def test_read_table_rejects_parquet_without_a_spark_schema(spark, tmp_path):
     # a table with no data file raises what spark.read.parquet raises
     with pytest.raises(AnalysisException):
         W.read_table(spark, str(tmp_path / "missing"))
+
+
+def test_replace_keys_anti_join_reads_the_keys_undeduplicated(
+        spark, tmp_path, monkeypatch):
+    """The surviving old rows are the old table anti-joined against the
+    staged batch's keys.  An anti join keeps the same rows whether or
+    not a key repeats, so the keep-write plan holds no aggregate: a
+    distinct() on the key side cost one shuffle and one Spark job per
+    call."""
+    path = str(tmp_path / "t")
+    W.overwrite(_frame(spark, [("a", 1.0, "2023-01"), ("b", 2.0, "2023-01")]),
+                path)
+    plans = []
+    real_append = W.append
+
+    def append(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real_append(df, *args, **kwargs)
+
+    monkeypatch.setattr(W, "append", append)
+    batch = _frame(spark, [("b", 5.0, "2023-01"), ("b", 5.0, "2023-01"),
+                           ("c", 7.0, "2023-01")])
+    W.replace_keys(batch, path, keys=["site", "period_month"])
+    assert len(plans) == 1, "replace_keys appends the kept rows once"
+    assert "LeftAnti" in plans[0] and "Aggregate" not in plans[0], plans[0]
+    got = sorted((r.site, r.amount) for r in W.read_table(spark, path)
+                 .collect())
+    assert got == [("a", 1.0), ("b", 5.0), ("b", 5.0), ("c", 7.0)]
+
+
+def test_staged_writes_once_and_removes_the_stage(spark, tmp_path):
+    """W.staged runs the shared plan once however many consumers read
+    the stage, reads it back with the frame's schema declared (no
+    inference job), and removes the stage on exit."""
+    stage = str(tmp_path / "t.__shared__")
+    os.makedirs(os.path.join(stage, "leftover"))  # a crashed prior run
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def site(s):
+        evaluated.add(1)
+        return s
+
+    df = _frame(spark, [("a", 1.0, "2023-01"), ("b", 2.0, "2023-02")]) \
+        .withColumn("site", site("site"))
+    with W.staged(df, stage) as shared:
+        assert not os.path.exists(os.path.join(stage, "leftover"))
+        before = _job_id(spark)
+        assert shared.schema == df.schema
+        assert _job_id(spark) == before, "the read-back inferred a schema"
+        n = shared.filter("amount > 1").count()
+        rows = sorted(map(tuple, shared.collect()))
+    assert n == 1
+    assert rows == [("a", 1.0, "2023-01"), ("b", 2.0, "2023-02")]
+    assert evaluated.value == 2, "each row of df must be computed once"
+    assert not os.path.exists(stage)
+
+
+def test_staged_removes_the_stage_when_the_block_fails(spark, tmp_path):
+    import pytest
+
+    stage = str(tmp_path / "t.__shared__")
+    with pytest.raises(RuntimeError, match="consumer failed"):
+        with W.staged(_frame(spark, [("a", 1.0, "2023-01")]), stage):
+            assert os.path.isdir(stage)
+            raise RuntimeError("consumer failed")
+    assert not os.path.exists(stage)
+    with pytest.raises(ValueError, match="local-path-only"):
+        with W.staged(_frame(spark, [("a", 1.0, "2023-01")]),
+                      "s3://bucket/t.__shared__"):
+            pass

@@ -220,3 +220,66 @@ def test_dag_backfill_range_is_idempotent_and_stops_on_failure(
     r3 = reg2.run_range(spark, dates)
     assert list(r3) == ["2023-11-01"]  # second date never ran
     assert any(v.startswith("error") for v in r3["2023-11-01"].values())
+
+
+# per multi-consumer job: the source only it reads, the column a
+# counting UDF wraps in it, and the reads of that source per run when
+# the shared intermediate is computed once (meter_group_packaging also
+# copies the account rows themselves, outside the shared rollup)
+SHARED_UPSTREAM = {"esgi_to_raw": ("esgi_indicators", "data_value", 1),
+                   "scope_overview": ("green", "amount", 1),
+                   "import_actual_elect": ("wihk_csr", "amount", 1),
+                   "meter_group_packaging": ("green_accounts", "amount", 2)}
+
+
+def test_dag_evaluates_each_shared_upstream_once(spark, tmp_path,
+                                                 monkeypatch):
+    """A job with several consumers of one intermediate stages it with
+    W.staged, so the intermediate's plan -- and every input row under
+    it -- is computed once per run, both when the job creates its
+    tables and when it merges into them.  Deriving each consumer from
+    the unstaged frame computed it once per consumer.  No stage dir
+    outlives its job, also when the job fails inside the block."""
+    from pyspark.sql import functions as F
+
+    from perfbench import gen
+
+    first = dt.date(2024, 1, 1)
+    tables = gen.esg_sources(seed=7, scale=1, run_date=first)
+    keep = ("esgi_indicators", "plant_mapping", "solar", "green",
+            "carbon_coef", "target_versions", "wihk_csr", "wihk_esgi",
+            "green_accounts", "meter_group", "meter_group_mapping")
+    sources = {k: spark.createDataFrame(tables[k]) for k in keep}
+    counts = {}
+    for job, (src, col, _) in SHARED_UPSTREAM.items():
+        acc = counts[job] = spark.sparkContext.accumulator(0)
+
+        def passthrough(v, acc=acc):
+            acc.add(1)
+            return v
+
+        # nondeterministic: the optimizer must not copy the call into
+        # a pushed-down filter, which would count a row twice
+        udf = F.udf(passthrough, sources[src].schema[col].dataType) \
+            .asNondeterministic()
+        sources[src] = sources[src].withColumn(col, udf(col))
+    wh = str(tmp_path / "wh")
+    reg = build_warehouse_dag(wh, sources, base_year=2023)
+    for _ in range(2):  # creates the tables, then merges into them
+        assert set(reg.run_all(spark, first).values()) == {"ok"}
+    assert {j: a.value for j, a in counts.items()} == {
+        j: 2 * reads * tables[src].num_rows
+        for j, (src, _, reads) in SHARED_UPSTREAM.items()}
+    shared = [d for _, dirs, _ in os.walk(wh) for d in dirs
+              if d.endswith(".__shared__")]
+    assert shared == []
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("consumer failed")
+
+    monkeypatch.setattr(W, "replace_keys", fail)
+    results = reg.run_all(spark, first)
+    assert results["esgi_to_raw"].startswith("error")
+    assert "consumer failed" in results["esgi_to_raw"]
+    assert [d for _, dirs, _ in os.walk(wh) for d in dirs
+            if d.endswith(".__shared__")] == []

@@ -22,12 +22,14 @@ Nightly mode builds the ``nightly_dag`` benchmark workload
 month, then a re-run of it) and then MONTHS steady-state months.  In
 each of those it runs the DAG's jobs one at a time in dependency
 order and prints, per job, the Spark jobs and SQL executions it
-started and the CPU seconds of the process tree (driver, JVM, Python
-workers) it took.  One job at a time keeps the counts and the CPU
-attributable; ``run_all`` runs independent jobs concurrently, so the
-benchmark's wall time is not the sum printed here.  Scratch files go
-under perfbench/.work/profile_nightly; cores are the process's CPU
-affinity, as in the benchmark.
+started, the Scan nodes in those executions' plans and the CPU
+seconds of the process tree (driver, JVM, Python workers) it took.  A
+job that scans more often than it has inputs and outputs to read
+computes part of its upstream more than once.  One job at a time
+keeps the counts and the CPU attributable; ``run_all`` runs
+independent jobs concurrently, so the benchmark's wall time is not the
+sum printed here.  Scratch files go under perfbench/.work/profile_nightly;
+cores are the process's CPU affinity, as in the benchmark.
 """
 
 from __future__ import annotations
@@ -102,10 +104,23 @@ def nightly(months: int, scale: int, seed: int) -> None:
     sc = spark.sparkContext._jsc.sc()
     sql = spark._jsparkSession.sharedState().statusStore()
 
-    def counters() -> tuple[int, int, float]:
+    next_exec = scans = 0
+
+    def counters() -> tuple[int, int, int, float]:
+        """Spark jobs, SQL executions and Scan nodes so far, and the
+        process tree's CPU seconds.  Scans are counted in the plan
+        graphs (the final adaptive plans) of the executions that
+        finished since the previous call."""
+        nonlocal next_exec, scans
         sc.listenerBus().waitUntilEmpty(30_000)
+        while not sql.execution(next_exec).isEmpty():
+            nodes = sql.planGraph(next_exec).allNodes()
+            scans += sum(1 for i in range(nodes.size())
+                         if nodes.apply(i).name().startswith(
+                             ("Scan", "BatchScan")))
+            next_exec += 1
         return (sc.dagScheduler().nextJobId(), sql.executionsCount(),
-                bench.tree_cpu_s())
+                scans, bench.tree_cpu_s())
 
     try:
         wl = NightlyDag(spark, os.path.join(bench.WORK, "profile_nightly"),
@@ -126,17 +141,17 @@ def nightly(months: int, scale: int, seed: int) -> None:
         width = max(map(len, order))
         for p in range(1, months + 1):
             print(f"month {wl.run_date(p):%Y-%m}\n  {'job':<{width}}  "
-                  f"spark jobs  sql execs  cpu s")
-            total = [0, 0, 0.0]
+                  f"spark jobs  sql execs  scans  cpu s")
+            total = [0, 0, 0, 0.0]
             for name in order:
                 before = counters()
                 reg[name].run(spark, wl.run_date(p))
                 delta = [a - b for a, b in zip(counters(), before)]
                 total = [t + d for t, d in zip(total, delta)]
                 print(f"  {name:<{width}}  {delta[0]:10d}  {delta[1]:9d}  "
-                      f"{delta[2]:5.2f}")
+                      f"{delta[2]:5d}  {delta[3]:5.2f}")
             print(f"  {'total':<{width}}  {total[0]:10d}  {total[1]:9d}  "
-                  f"{total[2]:5.2f}")
+                  f"{total[2]:5d}  {total[3]:5.2f}")
     finally:
         bench.stop_session(spark)
 
