@@ -48,8 +48,8 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned im
     CommitBackend,
     _data_files,
     _physical_name,
+    _prune,
     _read_files_dv,
-    _read_stats,
     current_version,
     table_schema,
 )
@@ -350,12 +350,44 @@ def _maybe_contains(abs_path: str, col: str, value) -> bool:
                                    sc["m_bits"]))
 
 
+def _prober(table_dir: str, n: int):
+    """``maybe(rel, phys_col, value) -> bool`` for version ``n``:
+    False only when a bloom filter proves ``value`` absent from data
+    file ``rel``.  The consolidated index answers first; a file it
+    does not cover, or recorded as unindexed (it may have a sidecar
+    by now), falls through to the per-file sidecar.  Indexes and
+    per-value hash lanes are memoized across calls -- O(values)
+    digests, not O(files x values)."""
+    root = os.path.abspath(table_dir)
+    idx_cache: dict = {}
+    lanes_cache: dict = {}
+
+    def maybe(rel: str, col: str, value) -> bool:
+        if col not in idx_cache:
+            idx_cache[col] = _consolidated(table_dir, col, n) or {}
+        entry = idx_cache[col].get(rel)
+        if entry is False:
+            return False  # column physically absent: all-NULL there
+        if entry is None:
+            return _maybe_contains(os.path.join(root, rel), col, value)
+        if value not in lanes_cache:
+            lanes_cache[value] = _lanes(value)
+        m_bits, n_hashes, bits = entry
+        return all(bits[p >> 3] & (1 << (p & 7))
+                   for p in _positions(*lanes_cache[value], n_hashes,
+                                       m_bits))
+
+    return maybe
+
+
 def lookup_files(table_dir: str, col: str, value,
                  n: int | None = None,
                  backend: CommitBackend | None = None) -> list[str]:
-    """The files of version ``n`` a point probe must read: min/max
-    stats prune first (free -- already in the manifest), then the
-    bloom sidecars.  Pure metadata; no Spark job."""
+    """The files of version ``n`` a point probe must read: the one
+    file pruner (:func:`~.versioned._prune`) over ``col == value``
+    -- partition directories and min/max stats first (free --
+    already in the manifest), then the bloom index and sidecars.
+    Pure metadata; no Spark job."""
     backend = backend or _DEFAULT_BACKEND
     if value is None:
         raise ValueError("point lookup on NULL: filter isNull instead")
@@ -372,36 +404,7 @@ def lookup_files(table_dir: str, col: str, value,
         raise ValueError(
             f"bloom lookup on {col!r}: not a column of {table_dir} "
             f"v_{n:08d} (schema: {st.fieldNames()})")
-    # manifest stats speak LOGICAL names; sidecars and consolidated
-    # indexes are keyed by the stable PHYSICAL name
-    phys = _physical_name(st, col)
-    root = os.path.abspath(table_dir)
-    stats = _read_stats(table_dir, n)
-    idx = _consolidated(table_dir, phys, n)
-    h1 = h2 = None
-    if idx is not None:
-        h1, h2 = _lanes(value)
-    out = []
-    for f in _data_files(table_dir, n):
-        if f in stats and col in stats[f]:
-            lo, hi = stats[f][col]
-            if not (lo <= value <= hi):
-                continue
-        if idx is not None and f in idx:
-            entry = idx[f]
-            if entry is False:
-                continue  # column physically absent: all-NULL there
-            if entry is not None:
-                m_bits, n_hashes, bits = entry
-                if all(bits[p >> 3] & (1 << (p & 7))
-                       for p in _positions(h1, h2, n_hashes, m_bits)):
-                    out.append(f)
-                continue
-            # entry None: unindexed at consolidation time -- fall
-            # through to the per-file sidecar (it may exist by now)
-        if _maybe_contains(os.path.join(root, f), phys, value):
-            out.append(f)
-    return out
+    return _prune(table_dir, n, [("eq", col, value)], st)[0]
 
 
 def point_lookup(spark: SparkSession, table_dir: str, col: str,

@@ -65,7 +65,6 @@ from pyspark.sql import SparkSession
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
     _DEFAULT_BACKEND,
-    _MANIFEST,
     _STAGE_PREFIX,
     _TXN_PREFIX,
     CommitBackend,
@@ -79,6 +78,7 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned im
     _rows_lines,
     _stats_lines,
     _txns,
+    _write_manifest,
     _write_schema_file,
     current_version,
     table_schema,
@@ -144,9 +144,7 @@ def _commit_v1(dst_dir: str, schema, lines: list[str],
     vdir = os.path.join(dst_dir, "v_00000001")
     try:
         _write_schema_file(staged, schema)
-        with open(os.path.join(staged, _MANIFEST), "w",
-                  encoding="ascii") as fh:
-            fh.write("\n".join(lines) + "\n")
+        _write_manifest(staged, lines)
         try:
             os.rename(staged, vdir)
         except OSError as exc:

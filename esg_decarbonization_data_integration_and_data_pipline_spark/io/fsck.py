@@ -32,9 +32,6 @@ from pyspark.sql import SparkSession
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
     _DEFAULT_BACKEND,
-    _MANIFEST,
-    _ROWS_PREFIX,
-    _STATS_PREFIX,
     CommitBackend,
     _data_files,
     _decode_dv_full,
@@ -42,8 +39,7 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned im
     _read_dvs,
     _read_rowmeta,
     _read_stats,
-    _rows_lines,
-    _stats_lines,
+    _refresh_file_meta,
     committed_versions,
     current_version,
     table_schema,
@@ -301,7 +297,8 @@ def repair_table(spark: SparkSession, table_dir: str,
     files cannot be repaired and are returned for human triage.
 
     One executor task per unique present file computes the footer
-    facts; each manifest then rewrites atomically (tmp + replace).
+    facts; each manifest whose records change is then rewritten
+    atomically (tmp + replace).
     Guarded by the table's admin lock (shared with the purge -- both
     rewrite committed manifests in place) and a pointer check: a
     commit landing mid-repair raises
@@ -309,8 +306,6 @@ def repair_table(spark: SparkSession, table_dir: str,
 
     Returns ``{"files_refreshed": int, "versions": [..],
     "unrepairable": [missing/unreadable files]}``."""
-    import json as _json
-
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.purge import (
         _acquire_purge_lock,
     )
@@ -375,52 +370,7 @@ def repair_table(spark: SparkSession, table_dir: str,
         fresh = {f: m for f, m in fresh.items() if m[0] != "error"}
 
         for v in versions:
-            p = os.path.join(table_dir, f"v_{v:08d}", _MANIFEST)
-            try:
-                with open(p, encoding="ascii") as fh:
-                    raw = fh.read()
-            except OSError:
-                continue
-            kept, listed = [], []
-            for ln in raw.splitlines():
-                if not ln.strip():
-                    continue
-                if ln.startswith((_STATS_PREFIX, _ROWS_PREFIX)):
-                    prefix = _STATS_PREFIX \
-                        if ln.startswith(_STATS_PREFIX) else _ROWS_PREFIX
-                    f = _json.loads(ln[len(prefix):])["f"]
-                    if f in fresh:
-                        continue  # replaced by a fresh record below
-                kept.append(ln)
-                if not ln.startswith("#"):
-                    listed.append(ln)
-            st_v = table_schema(table_dir, v)
-            if st_v is None:
-                inv: dict[str, str] = {}
-                known: set[str] | None = None
-            else:
-                pm_v = pmaps[v]
-                inv = {pm_v.get(f.name, f.name): f.name
-                       for f in st_v.fields}
-                known = set(inv)
-            stats, rows = {}, {}
-            for f in listed:
-                if f not in fresh:
-                    continue
-                fs, rm = fresh[f]
-                s_v = {inv.get(c, c): val for c, val in fs.items()
-                       if known is None or c in known}
-                if s_v:
-                    stats[f] = s_v
-                rows[f] = {"n": rm["n"],
-                           "nn": {inv.get(c, c): val
-                                  for c, val in rm["nn"].items()
-                                  if known is None or c in known}}
-            out = (_stats_lines(stats) + _rows_lines(rows) + kept)
-            tmp = p + ".repair-tmp"
-            with open(tmp, "w", encoding="ascii") as fh:
-                fh.write("\n".join(out) + "\n")
-            os.replace(tmp, p)
+            _refresh_file_meta(table_dir, v, fresh)
     finally:
         try:
             os.remove(lock)

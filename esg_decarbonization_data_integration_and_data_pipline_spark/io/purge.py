@@ -67,12 +67,12 @@ from pyspark.sql import SparkSession
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
     _DEFAULT_BACKEND,
-    _MANIFEST,
     _ROWS_PREFIX,
     _STATS_PREFIX,
     CommitBackend,
     VersionConflictError,
     _data_files,
+    _edit_manifest,
     _physical_map,
     _physical_name,
     _read_files,
@@ -80,6 +80,11 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned im
     committed_versions,
     current_version,
     table_schema,
+)
+# phase 3 for one manifest: re-record the candidates' fresh footer
+# facts (named for its place in the crash-ordered protocol)
+from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
+    _refresh_file_meta as _readd_meta_lines,
 )
 
 
@@ -436,106 +441,49 @@ def _strip_meta_lines(table_dir: str, n: int,
                       files: set[str]) -> dict[str, set[str]]:
     """Phase 1 for one manifest: drop the #stats/#rows lines whose
     file is in ``files``; returns the per-file column set those lines
-    tracked (so phase 3 re-records the same surface).  Atomic via
-    tmp + os.replace; a missing manifest (snapshot version) is a
-    no-op."""
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            raw = fh.read()
-    except OSError:
-        return {}
+    tracked (so phase 3 re-records the same surface).  A manifest
+    with no such line is left unwritten."""
     tracked: dict[str, set[str]] = {}
-    kept: list[str] = []
-    for line in raw.splitlines():
-        rec = None
-        if line.startswith(_STATS_PREFIX):
-            rec = json.loads(line[len(_STATS_PREFIX):])
-            if rec["f"] in files:
-                tracked.setdefault(rec["f"], set()).add(rec["c"])
-                continue
-        elif line.startswith(_ROWS_PREFIX):
-            rec = json.loads(line[len(_ROWS_PREFIX):])
-            if rec["f"] in files:
-                tracked.setdefault(rec["f"], set()).update(
-                    rec.get("nn", {}).keys())
-                continue
-        kept.append(line)
-    tmp = p + ".purge-tmp"
-    with open(tmp, "w", encoding="ascii") as fh:
-        fh.write("\n".join(kept) + "\n")
-    os.replace(tmp, p)
+
+    def edit(lines: list[str]) -> list[str] | None:
+        kept: list[str] = []
+        for line in lines:
+            if line.startswith((_STATS_PREFIX, _ROWS_PREFIX)):
+                rec = json.loads(line.partition(" ")[2])
+                if rec["f"] in files:
+                    tracked.setdefault(rec["f"], set()).update(
+                        [rec["c"]] if line.startswith(_STATS_PREFIX)
+                        else rec.get("nn", {}).keys())
+                    continue
+            kept.append(line)
+        return kept if tracked else None
+
+    _edit_manifest(table_dir, n, edit)
     return tracked
-
-
-def _readd_meta_lines(table_dir: str, n: int,
-                      meta: dict[str, tuple[dict, dict]]) -> None:
-    """Phase 3 for one manifest: prepend fresh #stats/#rows lines for
-    the files in ``meta`` ({relpath: (stats_cols, rowmeta)}) that the
-    manifest's data lines reference.  Any EXISTING #stats/#rows line
-    for those files is dropped first -- re-adding must replace, never
-    accumulate (a duplicate line for the same file would make the
-    last-occurrence parse winner arbitrary; r10 review finding #3)."""
-    from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-        _rows_lines, _stats_lines,
-    )
-
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            raw = fh.read()
-    except OSError:
-        return
-
-    def _meta_for(line: str) -> str | None:
-        for prefix in (_STATS_PREFIX, _ROWS_PREFIX):
-            if line.startswith(prefix):
-                return json.loads(line[len(prefix):])["f"]
-        return None
-
-    lines = [ln for ln in raw.splitlines()
-             if ln.strip() and _meta_for(ln) not in meta]
-    listed = {ln for ln in lines if not ln.startswith("#")}
-    stats = {f: m[0] for f, m in meta.items()
-             if f in listed and m[0]}
-    rows = {f: m[1] for f, m in meta.items() if f in listed}
-    fresh = _stats_lines(stats) + _rows_lines(rows)
-    tmp = p + ".purge-tmp"
-    with open(tmp, "w", encoding="ascii") as fh:
-        fh.write("\n".join(fresh + lines) + "\n")
-    os.replace(tmp, p)
 
 
 def _update_dv_counts(table_dir: str, n: int,
                       new_counts: dict[str, int]) -> None:
     """Fix the ``#dv`` lines' recorded counts in one manifest after a
-    purge remapped the named sidecars (atomic tmp + replace; missing
-    manifest = snapshot version = no-op)."""
+    purge remapped the named sidecars (a manifest whose counts are
+    already right is left unwritten)."""
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import _DV_PREFIX
 
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            raw = fh.read()
-    except OSError:
-        return
-    out = []
-    changed = False
-    for line in raw.splitlines():
-        if line.startswith(_DV_PREFIX):
-            rec = json.loads(line[len(_DV_PREFIX):])
-            if (rec["d"] in new_counts
-                    and rec["n"] != new_counts[rec["d"]]):
-                rec["n"] = new_counts[rec["d"]]
-                line = _DV_PREFIX + json.dumps(rec, sort_keys=True)
-                changed = True
-        out.append(line)
-    if not changed:
-        return
-    tmp = p + ".purge-tmp"
-    with open(tmp, "w", encoding="ascii") as fh:
-        fh.write("\n".join(out) + "\n")
-    os.replace(tmp, p)
+    def edit(lines: list[str]) -> list[str] | None:
+        out = []
+        changed = False
+        for line in lines:
+            if line.startswith(_DV_PREFIX):
+                rec = json.loads(line[len(_DV_PREFIX):])
+                if (rec["d"] in new_counts
+                        and rec["n"] != new_counts[rec["d"]]):
+                    rec["n"] = new_counts[rec["d"]]
+                    line = _DV_PREFIX + json.dumps(rec, sort_keys=True)
+                    changed = True
+            out.append(line)
+        return out if changed else None
+
+    _edit_manifest(table_dir, n, edit)
 
 
 def purge_keys_history(spark: SparkSession, table_dir: str, key: str,
@@ -646,8 +594,8 @@ def purge_keys_history(spark: SparkSession, table_dir: str, key: str,
         # phase 3: re-record fresh footer metadata for every
         # candidate (unchanged files get identical lines back).
         # Footers are read ONCE per file under the union of PHYSICAL
-        # column names, then translated back to each version's
-        # logical names when its manifest is rewritten.
+        # column names; _readd_meta_lines translates them back to
+        # each version's logical names.
         from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import _file_meta
 
         to_phys: dict[int, dict[str, str]] = {}
@@ -663,31 +611,11 @@ def purge_keys_history(spark: SparkSession, table_dir: str, key: str,
         for rel in union:
             if not phys_cols[rel]:
                 phys_cols[rel] = {phys}
-        fresh_phys: dict[str, tuple[dict, dict]] = {}
-        for rel in union:
-            st, rm = _file_meta(os.path.join(abs_root, rel),
-                                sorted(phys_cols[rel]))
-            fresh_phys[rel] = (st, rm)
+        fresh_phys = {rel: _file_meta(os.path.join(abs_root, rel),
+                                      sorted(phys_cols[rel]))
+                      for rel in union}
         for n in versions:
-            st_n = table_schema(table_dir, n)
-            if st_n is None:
-                inv = {}
-                known = None  # legacy: identity, keep everything
-            else:
-                pm = to_phys[n]
-                inv = {pm.get(f.name, f.name): f.name
-                       for f in st_n.fields}
-                known = set(inv)
-            fresh_n: dict[str, tuple[dict, dict]] = {}
-            for rel, (fstats, frm) in fresh_phys.items():
-                s_n = {inv.get(c, c): v for c, v in fstats.items()
-                       if known is None or c in known}
-                r_n = {"n": frm["n"],
-                       "nn": {inv.get(c, c): v
-                              for c, v in frm["nn"].items()
-                              if known is None or c in known}}
-                fresh_n[rel] = (s_n, r_n)
-            _readd_meta_lines(table_dir, n, fresh_n)
+            _readd_meta_lines(table_dir, n, fresh_phys)
     finally:
         try:
             os.remove(lock)

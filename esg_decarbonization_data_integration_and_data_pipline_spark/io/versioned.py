@@ -573,9 +573,7 @@ def write_version(df: DataFrame, table_dir: str,
                          {f"{vname}/{f}": r
                           for f, r in rowmeta.items()})
                      + [f"{vname}/{f}" for f in rel_files])
-            with open(os.path.join(target, _MANIFEST), "w",
-                      encoding="ascii") as fh:
-                fh.write("\n".join(lines) + "\n")
+            _write_manifest(target, lines)
             # monotonic pointer via optimistic conditional put: read
             # the pointer, reject if a HIGHER version already
             # committed (a bare blind write would flip the pointer
@@ -1080,29 +1078,17 @@ def _snapshot_meta(staged: str, rel_files, schema, stats_columns
     footer min/max."""
     from urllib.parse import unquote
 
-    names = set(schema.fieldNames())
-    want = sorted(set(stats_columns) & names)
+    want = sorted(set(stats_columns) & set(schema.fieldNames()))
     stats: dict[str, dict[str, tuple]] = {}
     rowmeta: dict[str, dict] = {}
     for rel in rel_files:
         fs, rm = _file_meta(os.path.join(staged, rel), want)
-        # Spark's partitionBy strips partition columns from the
-        # parquet footers; their path value is an exact stat
-        for seg in rel.split("/")[:-1]:
-            if "=" not in seg:
-                continue
-            pc, _, pv = seg.partition("=")
-            if pc not in names:
-                continue
-            pv = unquote(pv)
-            if pv == _NULL_PARTITION:
-                rm["nn"][pc] = rm["n"]
-                continue
-            tv = _typed_partition_value(pv, schema[pc].dataType)
-            if tv is not None and isinstance(tv,
-                                             (int, float, str, bool)):
-                fs[pc] = (tv, tv)
-            rm["nn"][pc] = 0
+        # stage-relative: every directory segment is below the
+        # version dir
+        pvals = {k: unquote(v) for k, _, v in (
+            seg.partition("=") for seg in rel.split("/")[:-1]
+            if "=" in seg)}
+        _record_partition_meta(pvals, schema, {}, fs, rm)
         if fs:
             stats[rel] = fs
         rowmeta[rel] = rm
@@ -1118,16 +1104,13 @@ def _manifest(table_dir: str, n: int) -> dict[str, list[str]] | None:
     version (no manifest: the dir's own files ARE the version --
     :func:`write_version`'s layout).  Every manifest accessor
     decodes from this."""
-    p = os.path.join(table_dir, f"v_{n:08d}", _MANIFEST)
-    try:
-        with open(p, encoding="ascii") as fh:
-            raw = fh.read()
-    except OSError:
+    lines = _manifest_lines(os.path.join(table_dir, f"v_{n:08d}"))
+    if lines is None:
         return None
     out: dict[str, list[str]] = {
         t: [] for t in ("", _TXN_PREFIX, _STATS_PREFIX, _ROWS_PREFIX,
                         _BASE_PREFIX, _OP_PREFIX, _DV_PREFIX)}
-    for line in raw.splitlines():
+    for line in lines:
         if not line.strip():
             continue
         if not line.startswith("#"):
@@ -1137,6 +1120,85 @@ def _manifest(table_dir: str, n: int) -> dict[str, list[str]] | None:
         if tag + sp in out:
             out[tag + sp].append(payload)
     return out
+
+
+def _manifest_lines(vdir: str) -> list[str] | None:
+    """The raw lines of ``vdir``'s ``_MANIFEST`` in file order, or
+    None when it has none (a snapshot version)."""
+    try:
+        with open(os.path.join(vdir, _MANIFEST), encoding="ascii") as fh:
+            return fh.read().splitlines()
+    except OSError:
+        return None
+
+
+def _write_manifest(vdir: str, lines: list[str]) -> None:
+    """THE manifest writer: ``lines`` become ``vdir``'s ``_MANIFEST``
+    through a tmp file and ``os.replace``, so a reader sees the old
+    manifest or the new one, never a torn one.  New versions write
+    theirs into a still-invisible staged dir; :func:`_edit_manifest`
+    rewrites committed ones in place."""
+    p = os.path.join(vdir, _MANIFEST)
+    tmp = p + ".tmp"
+    with open(tmp, "w", encoding="ascii") as fh:
+        fh.write("\n".join(lines) + "\n")
+    os.replace(tmp, p)
+
+
+def _edit_manifest(table_dir: str, n: int, edit) -> bool:
+    """Read-edit-replace of committed ``v_n``'s manifest: ``edit``
+    maps its lines to the new lines, or returns None for "no change"
+    (nothing is written).  Returns whether it wrote; a snapshot
+    version (no manifest) is a no-op.  Purge's metadata phases and
+    fsck's repair edit manifests only through here."""
+    vdir = os.path.join(table_dir, f"v_{n:08d}")
+    lines = _manifest_lines(vdir)
+    if lines is None:
+        return False
+    out = edit(lines)
+    if out is None:
+        return False
+    _write_manifest(vdir, out)
+    return True
+
+
+def _refresh_file_meta(table_dir: str, n: int,
+                       fresh: dict[str, tuple[dict, dict]]) -> bool:
+    """Replace ``v_n``'s #stats/#rows records of the files in
+    ``fresh`` (``{relpath: (stats, rowmeta)}`` from their footers,
+    keyed by PHYSICAL column names) with those facts under ``v_n``'s
+    LOGICAL names; columns ``v_n``'s schema lacks are dropped (a
+    schema-less legacy version keeps them all).  A file the manifest
+    does not list gets no record.  Existing records are replaced,
+    never accumulated: a duplicate line for one file would make the
+    last-occurrence parse winner arbitrary.  A manifest whose
+    records already match is left unwritten."""
+    import json
+
+    st = table_schema(table_dir, n)
+    pm = _physical_map(st) if st is not None else {}
+    inv = ({pm.get(f.name, f.name): f.name for f in st.fields}
+           if st is not None else None)
+
+    def logical(cols: dict) -> dict:
+        if inv is None:
+            return dict(cols)
+        return {inv[c]: v for c, v in cols.items() if c in inv}
+
+    def edit(lines: list[str]) -> list[str] | None:
+        kept = [ln for ln in lines if ln.strip() and not (
+            ln.startswith((_STATS_PREFIX, _ROWS_PREFIX))
+            and json.loads(ln.partition(" ")[2])["f"] in fresh)]
+        listed = [ln for ln in kept
+                  if not ln.startswith("#") and ln in fresh]
+        stats = {f: logical(fresh[f][0]) for f in listed}
+        rows = {f: {"n": fresh[f][1]["n"],
+                    "nn": logical(fresh[f][1]["nn"])} for f in listed}
+        out = (_stats_lines({f: s for f, s in stats.items() if s})
+               + _rows_lines(rows) + kept)
+        return out if out != lines else None
+
+    return _edit_manifest(table_dir, n, edit)
 
 
 def _stats_of(mf: dict[str, list[str]]) -> dict[str, dict[str, tuple]]:
@@ -1167,7 +1229,7 @@ def _version_meta(table_dir: str, n: int
     """ONE manifest parse of ``v_n`` -> (data_files, stats, rowmeta)
     -- the combined form of :func:`_data_files` + :func:`_read_stats`
     + :func:`_read_rowmeta` for planners that need all three (the
-    DataSource pushdown reader opens the manifest once instead of
+    file pruner :func:`_prune` opens the manifest once instead of
     three times per read).  Falls back to the snapshot-dir listing
     (no stats/rowmeta) exactly like ``_data_files``."""
     mf = _manifest(table_dir, n)
@@ -1402,12 +1464,22 @@ def table_rowcount(table_dir: str, n: int | None = None,
         if n is None:
             raise FileNotFoundError(
                 f"{table_dir} has no committed version (_CURRENT missing)")
+    return sum(rows for _f, rows in _live_rows(table_dir, n))
+
+
+def _live_rows(table_dir: str, n: int) -> list[tuple[str, int]]:
+    """``[(data file, live rows)]`` of version ``n`` from METADATA:
+    the manifest's per-file row count (a parquet-footer read for
+    files a pre-rows commit or a snapshot version recorded none
+    for) minus the deletion vector's recorded deleted count.  The
+    one per-file count behind :func:`table_rowcount` and
+    :func:`show_partitions`."""
     rowmeta = _read_rowmeta(table_dir, n)
     dvs = _read_dvs(table_dir, n)
     if dvs and _heal_pending_dv_remaps(table_dir, dvs):
         rowmeta = _read_rowmeta(table_dir, n)
         dvs = _read_dvs(table_dir, n)
-    total = 0
+    out = []
     for f in _data_files(table_dir, n):
         rec = rowmeta.get(f)
         phys = rec["n"] if rec is not None else _file_rowmeta(
@@ -1433,10 +1505,9 @@ def table_rowcount(table_dir: str, n: int | None = None,
                 # the manifest's deleted count could still be stale
                 # -- a control-plane-sized decode settles it
                 cnt = len(_dv_positions(table_dir, d_rel))
-            total += phys - cnt
-        else:
-            total += phys
-    return total
+            phys -= cnt
+        out.append((f, phys))
+    return out
 
 
 def show_partitions(table_dir: str, n: int | None = None,
@@ -1462,27 +1533,12 @@ def show_partitions(table_dir: str, n: int | None = None,
             raise FileNotFoundError(
                 f"{table_dir} has no committed version "
                 f"(_CURRENT missing)")
-    rowmeta = _read_rowmeta(table_dir, n)
-    dvs = _read_dvs(table_dir, n)
-    if dvs and _heal_pending_dv_remaps(table_dir, dvs):
-        rowmeta = _read_rowmeta(table_dir, n)
-        dvs = _read_dvs(table_dir, n)
     groups: dict[tuple, dict] = {}
-    for f in _data_files(table_dir, n):
+    for f, rows in _live_rows(table_dir, n):
         pv = _partition_values(f)
         key = tuple(sorted(
             (k, None if v == _NULL_PARTITION else v)
             for k, v in pv.items()))
-        rec = rowmeta.get(f)
-        rows = rec["n"] if rec is not None else _file_rowmeta(
-            os.path.join(table_dir, f), ())["n"]
-        if f in dvs:
-            d_rel, cnt = dvs[f]
-            witness = _dv_header_rows(table_dir, d_rel)
-            if witness is not None and witness != rows:
-                rows = witness
-                cnt = len(_dv_positions(table_dir, d_rel))
-            rows -= cnt
         g = groups.setdefault(key, {"n_files": 0, "n_rows": 0})
         g["n_files"] += 1
         g["n_rows"] += rows
@@ -1542,26 +1598,19 @@ def _count_where_plan(table_dir: str, n: int, col: str,
     meta_rows = 0
     boundary: list[str] = []
     for f in _data_files(table_dir, n):
-        s = stats.get(f, {}).get(col)
         rec = rowmeta.get(f)
-        if s is None and part_dt is not None and f not in dvs:
-            # partition-directory column: the path value is an exact
-            # [v, v] stat (and the null marker proves all-null)
-            pv = _partition_values(f).get(phys)
-            if pv == _NULL_PARTITION:
-                continue  # no row can match any range
-            if pv is not None:
-                tv = _typed_partition_value(pv, part_dt)
-                if tv is not None:
-                    s = (tv, tv)
-                    if rec is None or col not in rec["nn"]:
-                        # the path also proves zero nulls; row count
-                        # comes from rowmeta or one footer read
-                        n_rows = (rec["n"] if rec is not None else
-                                  _file_rowmeta(
-                                      os.path.join(table_dir, f),
-                                      ())["n"])
-                        rec = {"n": n_rows, "nn": {col: 0}}
+        # a partition-directory column's path value is an exact
+        # [v, v] stat (and the null marker proves all-null)
+        s, all_null = _file_range(_partition_values(f), phys, part_dt,
+                                  stats.get(f, {}).get(col))
+        if all_null:
+            continue  # no row can match any range
+        if all_null is False and (rec is None or col not in rec["nn"]):
+            # the path also proves zero nulls; row count comes from
+            # rowmeta or one footer read
+            n_rows = (rec["n"] if rec is not None else _file_rowmeta(
+                os.path.join(table_dir, f), ())["n"])
+            rec = {"n": n_rows, "nn": {col: 0}}
         if s is not None and ((hi is not None and s[0] > hi)
                               or (lo is not None and s[1] < lo)):
             continue  # provably outside (dv rows are a subset:
@@ -1648,9 +1697,9 @@ def _null_count_plan(table_dir: str, n: int,
         # footer: the footer's column-absent fallback would wrongly
         # report the file all-null, when the path value proves it
         # all-NON-null (or the null marker proves the opposite)
-        pv = _partition_values(f).get(phys)
-        if pv is not None:
-            if pv == _NULL_PARTITION:
+        _rng, all_null = _file_range(_partition_values(f), phys, None)
+        if all_null is not None:
+            if all_null:
                 meta_nulls += (rec["n"] if rec is not None else
                                _file_rowmeta(
                                    os.path.join(table_dir, f),
@@ -1729,18 +1778,13 @@ def _minmax_plan(table_dir: str, n: int,
             # conservative recorded range)
             scan.append(f)
             continue
-        s = stats.get(f, {}).get(col)
-        if s is None and part_dt is not None:
-            # partition-directory column: the path value IS the
-            # file's exact [v, v] stat (all-null marker contributes
-            # nothing, like an empty file)
-            pv = _partition_values(f).get(phys)
-            if pv == _NULL_PARTITION:
-                continue
-            if pv is not None:
-                tv = _typed_partition_value(pv, part_dt)
-                if tv is not None:
-                    s = (tv, tv)
+        # partition-directory column: the path value IS the file's
+        # exact [v, v] stat (all-null marker contributes nothing,
+        # like an empty file)
+        s, all_null = _file_range(_partition_values(f), phys, part_dt,
+                                  stats.get(f, {}).get(col))
+        if all_null:
+            continue
         if s is None:
             fstats, frows = _file_meta(os.path.join(table_dir, f),
                                        (phys,))
@@ -1824,70 +1868,240 @@ def column_range(spark: SparkSession, table_dir: str, col: str,
     return lo, hi
 
 
+def _file_range(pvals: dict[str, str], phys: str, dt, s=None):
+    """ONE file's known extent of a column: ``s`` (its recorded
+    ``(min, max)`` stats, if any) or else its Hive partition
+    directory -- ``pvals`` is :func:`_partition_values` of the file,
+    ``phys`` the directory's column name, ``dt`` the pinned Spark
+    type the path string parses under.  A ``col=v`` segment is the
+    exact ``[v, v]`` for every row and proves the column non-null;
+    the null marker proves it NULL throughout.  Returns ``(range or
+    None, all_null)``, ``all_null`` True (every row NULL), False (no
+    row NULL) or None (unknown).  The one place a directory value
+    becomes a range: the pruner and the metadata planners read it
+    here."""
+    pv = pvals.get(phys)
+    if pv is None:
+        return s, None
+    if pv == _NULL_PARTITION:
+        return None, True
+    if s is None and dt is not None:
+        tv = _typed_partition_value(pv, dt)
+        if tv is not None:
+            s = (tv, tv)
+    return s, False
+
+
+def _record_partition_meta(pvals: dict[str, str], schema,
+                           inv: dict[str, str], fs: dict,
+                           rm: dict) -> None:
+    """Record one own file's Hive partition directories (``pvals``,
+    keyed by physical name; ``inv`` maps physical -> logical) into
+    its commit-time stats ``fs`` and rowmeta ``rm``: Spark's
+    partitionBy strips partition columns from the footers, so the
+    path value is the exact ``[v, v]`` stat and the (0 or all) null
+    count -- every metadata tier then answers partition columns
+    exactly as footer-backed ones."""
+    for pc in pvals:
+        lc = inv.get(pc, pc)
+        if lc not in schema.fieldNames():
+            continue
+        rng, all_null = _file_range(pvals, pc, schema[lc].dataType)
+        rm["nn"][lc] = rm["n"] if all_null else 0
+        if rng is not None and isinstance(rng[0],
+                                          (int, float, str, bool)):
+            fs[lc] = rng
+
+
+def _prefix_next(p: str) -> str | None:
+    """The smallest string GREATER than every string starting with
+    ``p`` (increment the last non-max char), or None when no finite
+    bound exists (trailing max code points)."""
+    for i in range(len(p) - 1, -1, -1):
+        if ord(p[i]) < 0x10FFFF:
+            return p[:i] + chr(ord(p[i]) + 1)
+    return None
+
+
+def _range_excludes(op: str, val, lo, hi) -> bool:
+    """True when no value in ``[lo, hi]`` satisfies ``col <op> val``.
+    A bound whose type does not compare with the range keeps the
+    file.  ``prefix`` takes ``(p, next(p))``: strings starting with
+    ``p`` live in ``[p, next(p))``, and footer string stats are true
+    bounds even when truncated (parquet increments a truncated
+    max)."""
+    try:
+        if op == "eq":
+            return not lo <= val <= hi
+        if op == "gt":
+            return not hi > val
+        if op == "ge":
+            return not hi >= val
+        if op == "lt":
+            return not lo < val
+        if op == "le":
+            return not lo <= val
+        if op == "in":
+            return not any(lo <= v <= hi for v in val)
+        if op == "prefix":
+            p, nxt = val
+            return hi < p or (nxt is not None and lo >= nxt)
+    except TypeError:
+        pass
+    return False
+
+
+def _transform_keeps(op: str, val, raw: str, spec: dict) -> bool:
+    """Whether a HIDDEN transform directory value ``raw`` (io/
+    transforms) may hold a source value satisfying ``src <op> val``:
+    eq/in map to point probes (the only probes a bucket prunes),
+    ge/gt and le/lt to one-sided ranges; any other op, or a bound
+    that does not parse, keeps the file."""
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.transforms import keep_file
+
+    if op in ("eq", "in"):
+        probes = [(v, v) for v in ((val,) if op == "eq" else val)]
+    elif op in ("ge", "gt"):
+        probes = [(val, None)]
+    elif op in ("le", "lt"):
+        probes = [(None, val)]
+    else:
+        return True
+    try:
+        return any(keep_file(raw, spec["transform"], spec["param"],
+                             lo, hi, src_type=spec.get("src_type"))
+                   for lo, hi in probes)
+    except TypeError:
+        return True
+
+
+def _bloom_probe_ok(v, dt) -> bool:
+    """Whether a bloom filter can answer an equality probe for ``v``:
+    the hash encodes ``str(value)``, which only int and str keys
+    share with the stored column values, and only when the probe is
+    the column's own kind (an int column holding 5 hashes "5", but
+    ``'05'`` compares equal to it)."""
+    if isinstance(v, bool) or not isinstance(v, (int, str)):
+        return False
+    return dt is None or isinstance(v, str) == (
+        dt.typeName() == "string")
+
+
+def _prune(table_dir: str, n: int, conjuncts, st=None
+           ) -> tuple[list[str], int]:
+    """THE file pruner: ``(data files of v_n that may hold a row
+    matching every conjunct, total file count)``, kept files in
+    manifest order.  ``conjuncts`` are ``(op, col, val)`` over
+    LOGICAL column names, ``op`` one of eq/gt/ge/lt/le/in/isnull/
+    notnull/prefix (``in`` takes a tuple).  ``st``: the version's
+    pinned schema when the caller holds it.
+
+    A file is excluded only when metadata PROVES no row matches --
+    pruning is an optimization, never a filter; every caller
+    re-applies its predicate.  One manifest parse serves the rules,
+    cheapest first:
+
+    - identity partition directories (:func:`_file_range`): the
+      ``col=v`` value under the pinned type, or the null marker;
+    - hidden transforms from the version's ``_PARTSPEC``: a predicate
+      on the SOURCE column maps to a directory-value check, and a
+      transform directory proves the source all-NULL (the null
+      marker) or non-NULL (any other value; transforms
+      null-propagate);
+    - manifest min/max stats;
+    - manifest null counts (isnull needs a null, notnull a non-null
+      value);
+    - bloom filters for int/str eq/in probes: the consolidated index
+      first, then the per-file sidecar (a file the index does not
+      cover, or covered as unindexed, falls through to its sidecar).
+
+    Every rule stays valid on files with a deletion vector: a vector
+    only REMOVES rows, so the recorded ranges and counts are
+    conservative supersets."""
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.transforms import read_partspec
+
+    files, stats, rowmeta = _version_meta(table_dir, n)
+    if not conjuncts:
+        return files, len(files)
+    if st is None:
+        st = table_schema(table_dir, n)
+    types = ({f.name: f.dataType for f in st.fields}
+             if st is not None else {})
+    phys = {c: _physical_name(st, c) for _op, c, _v in conjuncts}
+    conj = [(op, col, (val, _prefix_next(val)) if op == "prefix"
+             else val) for op, col, val in conjuncts]
+    hidden: dict[str, list[dict]] = {}
+    for h in read_partspec(table_dir, n):
+        if h["transform"] != "identity":
+            hidden.setdefault(h["src"], []).append(h)
+
+    def excluded(f: str) -> bool:
+        pvals = _partition_values(f)
+        fstats = stats.get(f, {})
+        rec = rowmeta.get(f)
+        for op, col, val in conj:
+            rng, all_null = _file_range(pvals, phys[col],
+                                        types.get(col),
+                                        fstats.get(col))
+            no_value, no_null = all_null is True, all_null is False
+            for h in hidden.get(col, ()):
+                raw = pvals.get(h["dir"])
+                if raw == _NULL_PARTITION:
+                    no_value = True
+                elif raw is not None:
+                    no_null = True
+                    if not _transform_keeps(op, val, raw, h):
+                        return True
+            nulls = rec["nn"].get(col) if rec is not None else None
+            if op == "isnull":
+                if no_null or nulls == 0:
+                    return True
+            elif no_value or (op == "notnull" and nulls is not None
+                              and nulls == rec["n"]):
+                return True
+            elif rng is not None and _range_excludes(op, val, *rng):
+                return True
+        return False
+
+    kept = [f for f in files if not excluded(f)]
+    probes = []
+    for op, col, val in conj:
+        values = [val] if op == "eq" else list(val) if op == "in" \
+            else []
+        if values and all(_bloom_probe_ok(v, types.get(col))
+                          for v in values):
+            probes.append((phys[col], values))
+    if probes and kept:
+        from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import _prober
+
+        maybe = _prober(table_dir, n)
+        kept = [f for f in kept
+                if all(any(maybe(f, pc, v) for v in values)
+                       for pc, values in probes)]
+    return kept, len(files)
+
+
+def _range_conjuncts(col: str, lo, hi) -> list[tuple]:
+    """``lo <= col <= hi`` (None = unbounded side) as pruner
+    conjuncts; ``lo == hi`` is an equality probe, so bucket
+    transforms and bloom filters prune it too."""
+    if lo is not None and lo == hi:
+        return [("eq", col, lo)]
+    return ([("ge", col, lo)] if lo is not None else []) + \
+        ([("le", col, hi)] if hi is not None else [])
+
+
 def pruned_files(table_dir: str, n: int, col: str,
                  lo=None, hi=None) -> tuple[list[str], int]:
     """(data files of ``v_n`` that may contain rows with ``lo <= col
-    <= hi``, total file count).  A file is skipped ONLY when its
-    recorded [min, max] provably misses the range; files without
-    recorded stats for ``col`` are always kept -- pruning is an
-    optimization, never a filter.
-
-    Hive-partitioned layouts prune on the DIRECTORY value too: a
-    ``col=v`` path segment is an exact [v, v] stat for every row in
-    the file (and the null-partition marker means every row's
-    ``col`` is NULL, so any bounded range excludes the file).  The
-    path value is compared under the pinned schema's type; a type
-    with no safe parse keeps the file.
-
-    HIDDEN partition transforms (io/transforms -- Iceberg-style
-    ``year(col)`` / ``month(col)`` / ``bucket(N, col)`` / ...)
-    prune here too: the version's ``_PARTSPEC.json`` maps the probe
-    range on the SOURCE column through each transform to a
-    directory-value check (bucket prunes equality probes only;
-    every mapping is conservative -- unparseable keeps the file)."""
-    from esg_decarbonization_data_integration_and_data_pipline_spark.io.transforms import (
-        keep_file, read_partspec,
-    )
-
-    files = _data_files(table_dir, n)
-    stats = _read_stats(table_dir, n)
-    # partition-dir lookups go by the PHYSICAL column name (the name
-    # the directory was written under); the pinned schema supplies
-    # both the mapping and the comparison type
-    part_dt, phys_col = None, col
-    if _has_partition_dirs(files):
-        st = table_schema(table_dir, n)
-        if st is not None and col in st.fieldNames():
-            fld = st[col]
-            phys_col = _physical_map(st).get(col, col)
-            part_dt = fld.dataType
-    hidden = [s for s in read_partspec(table_dir, n)
-              if s["transform"] != "identity" and s["src"] == col]
-    kept = []
-    for f in files:
-        pv = _partition_values(f).get(phys_col)
-        if pv is not None and (lo is not None or hi is not None):
-            if pv == _NULL_PARTITION:
-                continue
-            if part_dt is not None:
-                tv = _typed_partition_value(pv, part_dt)
-                if tv is not None and (
-                        (hi is not None and tv > hi)
-                        or (lo is not None and tv < lo)):
-                    continue
-        if hidden:
-            pvals = _partition_values(f)
-            if not all(keep_file(pvals.get(h["dir"]), h["transform"],
-                                 h["param"], lo, hi,
-                                 src_type=h.get("src_type"))
-                       for h in hidden):
-                continue
-        s = stats.get(f, {}).get(col)
-        if s is not None and ((hi is not None and s[0] > hi)
-                              or (lo is not None and s[1] < lo)):
-            continue
-        kept.append(f)
-    return kept, len(files)
+    <= hi``, total file count) -- :func:`_prune` over the range's
+    conjuncts.  A file is skipped ONLY when its metadata provably
+    misses the range (recorded [min, max] stats, a Hive partition
+    directory value or null marker, a hidden transform directory, or
+    a bloom filter for ``lo == hi``); pruning is an
+    optimization, never a filter, and a bound whose type does not
+    compare with the metadata keeps the file."""
+    return _prune(table_dir, n, _range_conjuncts(col, lo, hi))
 
 
 def read_where_all(spark: SparkSession, table_dir: str,
@@ -1906,11 +2120,10 @@ def read_where_all(spark: SparkSession, table_dir: str,
         if n is None:
             raise FileNotFoundError(
                 f"{table_dir} has no committed version (_CURRENT missing)")
-    kept = set(_data_files(table_dir, n))
-    for col, (lo, hi) in predicates.items():
-        kept &= set(pruned_files(table_dir, n, col, lo, hi)[0])
     st = table_schema(table_dir, n)
-    files = [f for f in _data_files(table_dir, n) if f in kept]
+    files, _total = _prune(
+        table_dir, n, [c for col, (lo, hi) in predicates.items()
+                       for c in _range_conjuncts(col, lo, hi)], st)
     if not files:
         if st is None:
             files = _data_files(table_dir, n)[:1]
@@ -2053,11 +2266,6 @@ def _typed_partition_value(v: str, dt):
     except ValueError:
         return None
     return None
-
-
-def _has_partition_dirs(rel_files) -> bool:
-    return any("=" in seg for f in rel_files
-               for seg in f.split("/")[1:-1])
 
 
 # partition column types replace_partitions compares as parsed Python
@@ -2440,7 +2648,8 @@ def compact_where(spark: SparkSession, table_dir: str, col: str,
             f"(or compact_table(sort_by=[{col!r}])) first, or run "
             f"the full compact_table if rewriting everything is "
             f"intended")
-    cand, _total = pruned_files(table_dir, base, col, lo=lo, hi=hi)
+    cand, _total = _prune(table_dir, base,
+                          _range_conjuncts(col, lo, hi), st)
     if not cand:
         return None
     df = _read_files_dv(spark, table_dir, base, cand, st)
@@ -3310,10 +3519,11 @@ def delete_where_dv(spark: SparkSession, table_dir: str, col: str,
             f"{table_dir} has no committed version")
     if txn is not None and txn in _txns(table_dir, base):
         return base
-    cand, _total = pruned_files(table_dir, base, col, lo=lo, hi=hi)
+    st = table_schema(table_dir, base)
+    cand, _total = _prune(table_dir, base,
+                          _range_conjuncts(col, lo, hi), st)
     if not cand:
         return None
-    st = table_schema(table_dir, base)
     scan = _read_files(spark, table_dir, cand, st, with_pos=True)
     pred = F.lit(True)
     if lo is not None:
@@ -3674,9 +3884,7 @@ def _metadata_only_commit(table_dir: str, pinned_base: int,
                 else lines
             out_lines = [_op_line(op_name, op_params,
                                   op_metrics)] + out_lines
-            with open(os.path.join(claimed, _MANIFEST), "w",
-                      encoding="ascii") as fh:
-                fh.write("\n".join(out_lines) + "\n")
+            _write_manifest(claimed, out_lines)
             if backend.try_commit(table_dir,
                                   _next_pointer(raw, f"v_{n:08d}"),
                                   raw):
@@ -4027,26 +4235,10 @@ def _commit_staged_dir(table_dir: str, staged: str, txn: str | None,
                 rm = {"n": rm["n"],
                       "nn": {inv_p.get(c, c): v
                              for c, v in rm["nn"].items()}}
-                # a Hive-partitioned own file carries its partition
-                # columns in the PATH, not the footer: record the
-                # exact [v, v] stat and the (0 or all) null count so
-                # the metadata tiers answer for partition columns
-                # exactly as for footer-backed ones
-                for pc, pv in _partition_values(rel).items():
-                    lc = inv_p.get(pc, pc)
-                    if lc not in commit_schema.fieldNames():
-                        continue
-                    if pv == _NULL_PARTITION:
-                        rm["nn"][lc] = rm["n"]
-                        continue
-                    tv = _typed_partition_value(
-                        pv, commit_schema[lc].dataType)
-                    if tv is not None and isinstance(
-                            tv, (int, float, str, bool)):
-                        stats.setdefault(rel, {})[lc] = (tv, tv)
-                    rm["nn"][lc] = 0
-                if track and fs:
-                    stats.setdefault(rel, {}).update(fs)
+                _record_partition_meta(_partition_values(rel),
+                                       commit_schema, inv_p, fs, rm)
+                if fs:
+                    stats[rel] = fs
                 rowmeta[rel] = rm
             # deletion vectors ride the inheritance: an append/merge
             # must carry the base's #dv lines for every file it
@@ -4072,9 +4264,7 @@ def _commit_staged_dir(table_dir: str, staged: str, txn: str | None,
                      + _rows_lines(rowmeta)
                      + _dv_lines(dv_carry)
                      + inherited + own)
-            with open(os.path.join(claimed, _MANIFEST), "w",
-                      encoding="ascii") as fh:
-                fh.write("\n".join(lines) + "\n")
+            _write_manifest(claimed, lines)
             # hidden partition spec rides the inheritance: an
             # INHERITING commit (append/merge/replace) carries the
             # base's _PARTSPEC entries forward -- a spec-less append

@@ -655,9 +655,9 @@ def partition_pruning_audit(spark: SparkSession,
       partition's files are planned (the ``prune_exact`` flag row is
       recorded only if the kept set IS exactly the yr=1997 leaves and
       strictly smaller than the table);
-    - ``format_eq_1998``: the format() pushdown face -- the planner's
-      partition-exclusion drops every other directory before stats/
-      bloom checks (planned-partition exactness pinned by
+    - ``format_eq_1998``: the format() pushdown face -- the file
+      pruner (io/versioned._prune) drops every other directory before
+      stats/bloom checks (planned-partition exactness pinned by
       tests/test_partitioned_layout.py);
     - ``format_null``: an IS NULL pushdown -- only the null-marker
       directory survives planning, and the executor surfaces the
@@ -1089,7 +1089,7 @@ def hidden_partition_audit(spark: SparkSession,
       the table), and the predicate re-applies row-level so the
       values are exact at the mid-year boundaries;
     - ``hp_format_range``: the same contract through the format()
-      PUSHDOWN face (sources/versioned_source._hidden_exclude);
+      PUSHDOWN face (the same file pruner, io/versioned._prune);
     - ``hp_bucket_eq``: an equality probe on o_custkey prunes to the
       single md5-bucket directory (``hp_bucket_prune``), then
       re-filters exactly -- hash-bucket layout without a bucket

@@ -763,19 +763,13 @@ def fsck_report_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     left tampered, one repaired from it); the graded contract -- the
     three verify_table read-backs -- re-runs every call."""
     import json
-    import os
 
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.fsck import (
         repair_table, verify_table,
     )
-    from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import _MANIFEST
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import _edit_manifest
 
-    def build() -> dict:
-        healthy = orders_versioned_fixture(spark, sf_dir)
-        tampered = copy_fixture(healthy)
-        mpath = os.path.join(tampered, "v_00000001", _MANIFEST)
-        with open(mpath, encoding="ascii") as fh:
-            lines = fh.read().splitlines()
+    def tamper(lines: list[str]) -> list[str]:
         done_rows = done_stats = False
         out_lines = []
         for ln in lines:
@@ -793,8 +787,12 @@ def fsck_report_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_lines.append(ln)
         assert done_rows and done_stats, \
             "fixture manifest shape changed"
-        with open(mpath, "w", encoding="ascii") as fh:
-            fh.write("\n".join(out_lines) + "\n")
+        return out_lines
+
+    def build() -> dict:
+        healthy = orders_versioned_fixture(spark, sf_dir)
+        tampered = copy_fixture(healthy)
+        _edit_manifest(tampered, 1, tamper)
         repaired = copy_fixture(tampered)
         repair_table(spark, repaired)
         return {"dirs": [healthy, tampered, repaired],

@@ -40,10 +40,13 @@ same name-based resolution the schema-pinned parquet read performs).
 Filter pushdown (Spark 4.1; opt in per read with ``.option(
 "pushdown", "true")`` -- and the session must have ``spark.sql
 .python.filterPushdown.enabled`` on, which :func:`register` sets):
-pushed =/</>/in conjuncts prune FILES at planning time through the
-manifest min/max stats and the bloom sidecars / consolidated index
-(equality probes), and pre-filter ROWS executor-side before the
-Arrow transfer -- the boundary this face actually pays for.  Every
+pushed =/</>/in/IS NULL/IS NOT NULL/startswith conjuncts prune
+FILES at planning time through the one file pruner shared with the
+function API, io.versioned._prune (partition and hidden-transform
+directories, manifest min/max stats and null counts, and the bloom
+index / sidecars for equality probes), and pre-filter ROWS
+executor-side before the Arrow transfer -- the boundary this face
+actually pays for.  Every
 filter is returned to Spark for re-evaluation, so pushdown is pure
 pruning: it can never change results, only skip I/O.  It is an
 explicit option (not the default) because Spark 4.1 hard-errors on
@@ -744,16 +747,8 @@ class _BatchReader(DataSourceReader):
         # (r11 advisor).
         self.path = _table_path(options)
         self.n = n
-        st = _pinned_schema(self.path, self.n)
-        self.schema_bytes = _arrow_schema_bytes(st)
-        # logical -> physical (column mapping); bloom sidecars and
-        # consolidated indexes are keyed by the physical name
-        self._pmap = {f.name: (f.metadata or {}).get("physical",
-                                                     f.name)
-                      for f in st.fields}
-        # logical name -> Spark type: typed comparison for
-        # partition-directory pruning in the pushdown reader
-        self._spark_types = {f.name: f.dataType for f in st.fields}
+        self.schema_bytes = _arrow_schema_bytes(
+            _pinned_schema(self.path, self.n))
 
     def partitions(self) -> Sequence[InputPartition]:
         from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import _data_files
@@ -825,78 +820,14 @@ def _apply_row_filters(batch, filters: list):
     return batch.filter(mask)
 
 
-def _prefix_next(p: str) -> str | None:
-    """The smallest string GREATER than every string starting with
-    ``p`` (increment the last non-max char), or None when no finite
-    bound exists (trailing max code points)."""
-    for i in range(len(p) - 1, -1, -1):
-        if ord(p[i]) < 0x10FFFF:
-            return p[:i] + chr(ord(p[i]) + 1)
-    return None
-
-
-def _stats_exclude(per_file_stats: dict, filters: list) -> bool:
-    """True when the file's recorded [lo, hi] ranges PROVE no row can
-    satisfy the pushed conjuncts (manifest metadata, no I/O).  A
-    type-mismatched comparison keeps the file (conservative)."""
-    for op, col, val in filters:
-        rng = per_file_stats.get(col)
-        if rng is None:
-            continue
-        lo, hi = rng
-        try:
-            if op == "eq" and not lo <= val <= hi:
-                return True
-            if op == "gt" and not hi > val:
-                return True
-            if op == "ge" and not hi >= val:
-                return True
-            if op == "lt" and not lo < val:
-                return True
-            if op == "le" and not lo <= val:
-                return True
-            if op == "in" and not any(lo <= v <= hi for v in val):
-                return True
-            if op == "prefix":
-                # strings starting with p live in [p, next(p)); the
-                # planner pre-pairs val as (p, next(p)) so next() is
-                # derived once per filter, not once per file.  Footer
-                # string stats are true bounds even when truncated
-                # (parquet increments a truncated max).
-                p, nxt = val
-                if hi < p:
-                    return True
-                if nxt is not None and lo >= nxt:
-                    return True
-        except TypeError:
-            continue
-    return False
-
-
-def _null_exclude(per_file_rows: dict | None, filters: list) -> bool:
-    """True when the file's recorded null counts PROVE no row can
-    satisfy a pushed IsNull / IsNotNull conjunct.  ``per_file_rows``
-    is the manifest's ``{"n": rows, "nn": {col: nulls}}`` record (nn
-    only covers stats-tracked columns; absent = conservative keep)."""
-    if not per_file_rows:
-        return False
-    n = per_file_rows.get("n")
-    nn = per_file_rows.get("nn", {})
-    for op, col, _val in filters:
-        if col not in nn or n is None:
-            continue
-        if op == "isnull" and nn[col] == 0:
-            return True
-        if op == "notnull" and nn[col] == n:
-            return True
-    return False
-
-
 class _PushdownBatchReader(_BatchReader):
     """The batch reader with Spark-4.1 filter pushdown: pushed
-    conjuncts prune FILES driver-side (manifest min/max stats, then
-    bloom sidecars / the consolidated index for equality probes) and
-    pre-filter ROWS executor-side before the Arrow transfer.  Every
+    conjuncts prune FILES driver-side through the one file pruner,
+    io.versioned._prune (partition and hidden-transform directories,
+    manifest min/max stats and null counts, bloom filters for
+    equality probes -- the same rules read_where and lookup_files
+    apply), and pre-filter ROWS executor-side before the Arrow
+    transfer.  Every
     filter is returned to Spark for re-evaluation, so the pushdown is
     pure pruning -- it can never drop a row the plain reader keeps.
     Selected by reader() only when
@@ -948,209 +879,18 @@ class _PushdownBatchReader(_BatchReader):
                     self._pushed.append((op, attr[0], val))
         return filters  # Spark re-applies all: pruning-only contract
 
-    def _bloom_excludes(self, f: str, idx_cache: dict,
-                        lanes_cache: dict) -> bool:
-        """True when every equality probe value is provably absent
-        from the file (consolidated index first, else the per-file
-        sidecar; missing index = conservative keep).  ``lanes_cache``
-        memoizes the per-value md5 lanes across the whole file loop
-        -- O(values) digests, not O(files x values) (r12 review
-        finding; lookup_files hoists identically)."""
-        from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
-            _consolidated, _lanes, _maybe_contains, _positions,
-        )
-
-        for op, col, val in self._pushed:
-            if op not in ("eq", "in"):
-                continue
-            values = [val] if op == "eq" else list(val)
-            if not all(isinstance(v, (int, str))
-                       and not isinstance(v, bool) for v in values):
-                continue
-            phys = self._pmap.get(col, col)
-            if phys not in idx_cache:
-                idx_cache[phys] = _consolidated(self.path, phys,
-                                                self.n)
-            idx = idx_cache[phys]
-            maybe = False
-            for v in values:
-                if idx is not None and f in idx:
-                    entry = idx[f]
-                    if entry is False:
-                        continue  # column absent: all-NULL there
-                    if entry is None:
-                        maybe = True  # unindexed at consolidation
-                        break
-                    m_bits, n_hashes, bits = entry
-                    if v not in lanes_cache:
-                        lanes_cache[v] = _lanes(v)
-                    h1, h2 = lanes_cache[v]
-                    if all(bits[p >> 3] & (1 << (p & 7))
-                           for p in _positions(h1, h2, n_hashes,
-                                               m_bits)):
-                        maybe = True
-                        break
-                elif _maybe_contains(
-                        os.path.join(os.path.abspath(self.path), f),
-                        phys, v):
-                    maybe = True
-                    break
-            if not maybe:
-                return True
-        return False
-
-    def _partition_exclude(self, f: str) -> bool:
-        """True when the file's Hive partition-directory values PROVE
-        no row can satisfy the pushed conjuncts (a ``col=v`` segment
-        is an exact constant for every row; the null marker means the
-        column is NULL throughout).  Path values compare under the
-        pinned schema's type; anything unparseable keeps the file.
-        HIDDEN partition transforms (io/transforms) exclude here too:
-        a pushed predicate on the SOURCE column maps through the
-        version's _PARTSPEC to a directory-value check -- year/month/
-        day/truncate handle ranges, bucket handles eq/in, and a
-        transform directory value that is not the null marker proves
-        the source column non-null (every transform null-propagates),
-        so isnull/notnull prune as well."""
-        from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-            _NULL_PARTITION, _partition_values, _typed_partition_value,
-        )
-
-        raw = _partition_values(f)
-        if not raw:
-            return False
-        if self._hidden_exclude(f, raw):
-            return True
-        for op, col, val in self._pushed:
-            rv = raw.get(self._pmap.get(col, col))
-            if rv is None:
-                continue
-            if rv == _NULL_PARTITION:
-                # every row's col is NULL: no comparison or prefix
-                # matches, and notnull is unsatisfiable
-                if op != "isnull":
-                    return True
-                continue
-            if op == "isnull":
-                return True  # constant non-null value
-            if op == "notnull":
-                continue
-            dt = self._spark_types.get(col)
-            tv = _typed_partition_value(rv, dt) if dt is not None \
-                else None
-            if tv is None:
-                continue
-            try:
-                if ((op == "eq" and tv != val)
-                        or (op == "in" and tv not in val)
-                        or (op == "gt" and not tv > val)
-                        or (op == "ge" and not tv >= val)
-                        or (op == "lt" and not tv < val)
-                        or (op == "le" and not tv <= val)
-                        or (op == "prefix"
-                            and isinstance(tv, str)
-                            and not tv.startswith(val))):
-                    return True
-            except TypeError:
-                continue
-        return False
-
-    def _hidden_exclude(self, f: str, raw: dict) -> bool:
-        """Transform-directory exclusion for one file (see
-        ``_partition_exclude``).  The spec is read once per reader
-        from the version's _PARTSPEC sidecar."""
-        spec = getattr(self, "_hidden_spec_cache", None)
-        if spec is None:
-            from esg_decarbonization_data_integration_and_data_pipline_spark.io.transforms import (
-                read_partspec,
-            )
-
-            spec = [s for s in read_partspec(self.path, self.n)
-                    if s["transform"] != "identity"]
-            self._hidden_spec_cache = spec
-        if not spec:
-            return False
-        from esg_decarbonization_data_integration_and_data_pipline_spark.io.transforms import keep_file
-        from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import _NULL_PARTITION
-
-        for op, col, val in self._pushed:
-            for s in spec:
-                if s["src"] != col:
-                    continue
-                rv = raw.get(s["dir"])
-                if rv is None:
-                    continue
-                if rv == _NULL_PARTITION:
-                    if op != "isnull":
-                        return True  # src NULL throughout the file
-                    continue
-                if op == "isnull":
-                    return True  # transforms null-propagate: src
-                    #              is non-null throughout
-                if op == "notnull":
-                    continue
-                stype = s.get("src_type")
-                try:
-                    if op == "eq":
-                        keep = keep_file(rv, s["transform"],
-                                         s["param"], val, val,
-                                         src_type=stype)
-                    elif op == "in":
-                        keep = any(keep_file(rv, s["transform"],
-                                             s["param"], v, v,
-                                             src_type=stype)
-                                   for v in val)
-                    elif op in ("ge", "gt"):
-                        keep = keep_file(rv, s["transform"],
-                                         s["param"], val, None,
-                                         src_type=stype)
-                    elif op in ("le", "lt"):
-                        keep = keep_file(rv, s["transform"],
-                                         s["param"], None, val,
-                                         src_type=stype)
-                    else:
-                        keep = True
-                except TypeError:
-                    keep = True
-                if not keep:
-                    return True
-        return False
-
     def partitions(self) -> Sequence[InputPartition]:
-        from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import _version_meta
+        from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import _prune
 
-        root = os.path.abspath(self.path)
         if not self._pushed:
             return super().partitions()
-        # ONE manifest parse serves files + stats + rowmeta (Spark
-        # pushes IsNotNull alongside nearly every column predicate,
-        # so the null branch fires on most pushdown reads)
-        files, stats, rowmeta = _version_meta(self.path, self.n)
-        # per-filter prefix upper bounds hoisted out of the file loop
-        pushed = [(op, col,
-                   (val, _prefix_next(val)) if op == "prefix"
-                   else val)
-                  for op, col, val in self._pushed]
-        idx_cache: dict = {}
-        lanes_cache: dict = {}
+        root = os.path.abspath(self.path)
         dv = _dv_payloads(self.path, self.n)
-        parts = []
-        for f in files:
-            # stats/null/bloom exclusion stays valid on dv-bearing
-            # files: a vector only REMOVES rows, so the recorded
-            # physical ranges/counts are conservative supersets
-            if self._partition_exclude(f):
-                continue
-            if f in stats and _stats_exclude(stats[f], pushed):
-                continue
-            if _null_exclude(rowmeta.get(f), pushed):
-                continue
-            if self._bloom_excludes(f, idx_cache, lanes_cache):
-                continue
-            parts.append(_FilteredFilePart(
-                os.path.join(root, f), self.schema_bytes,
-                self._pushed, dv.get(f)))
-        return parts
+        kept, _total = _prune(self.path, self.n, self._pushed)
+        return [_FilteredFilePart(os.path.join(root, f),
+                                  self.schema_bytes, self._pushed,
+                                  dv.get(f))
+                for f in kept]
 
     def read(self, partition) -> Iterator:
         if partition is None:

@@ -211,6 +211,51 @@ def test_metadata_tiers_respect_vectors(spark, tmp_path):
     assert table_rowcount(td) == 6
 
 
+def test_show_partitions_sums_to_table_rowcount(spark, tmp_path):
+    """show_partitions and table_rowcount share one per-file live-row
+    count: on a partitioned dv-bearing table their totals equal the
+    scan, also when a dv-bearing file has no #rows record and its #dv
+    count is stale (both re-decode the vector then)."""
+    import json
+
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
+        show_partitions,
+        table_rowcount,
+    )
+
+    td = str(tmp_path / "t")
+    append_version(
+        spark.createDataFrame([(k, k % 3) for k in range(30)],
+                              "k bigint, g int"),
+        td, partition_by=["g"])
+    delete_keys_dv(spark, td,
+                   spark.createDataFrame([(1,), (2,), (3,), (4,)],
+                                         "k bigint"), "k")
+    n = current_version(td)
+    assert len(_read_dvs(td, n)) >= 3  # one vector per partition
+    live = read_current(spark, td).count()
+    assert live == 26
+    assert sum(p["n_rows"] for p in show_partitions(td)) \
+        == table_rowcount(td) == live
+
+    mf = os.path.join(td, f"v_{n:08d}", "_MANIFEST")
+    with open(mf, encoding="ascii") as fh:
+        lines = fh.read().splitlines()
+    out = []
+    for ln in lines:
+        if ln.startswith("#rows "):
+            continue
+        if ln.startswith("#dv "):
+            rec = json.loads(ln[len("#dv "):])
+            rec["n"] += 1
+            ln = "#dv " + json.dumps(rec, sort_keys=True)
+        out.append(ln)
+    with open(mf, "w", encoding="ascii") as fh:
+        fh.write("\n".join(out) + "\n")
+    assert sum(p["n_rows"] for p in show_partitions(td)) \
+        == table_rowcount(td) == live
+
+
 def test_read_where_and_point_lookup_respect_vectors(spark, tmp_path):
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
         build_bloom_index,

@@ -16,10 +16,17 @@ import pytest
 from esg_decarbonization_data_integration_and_data_pipline_spark.plans.queries import REGISTRY
 
 
+# smoke tier, run by default: the queries over the versioned-table
+# file pruner, the manifest rewriters and the metadata planners.  Every
+# other query is long-tail, skipped by the default run (pytest.ini
+# addopts -m "not slow"); select it with `-m slow`.
+SMOKE = frozenset((
+    "partition_pruning_audit", "hidden_partition_audit",
+    "datasource_pushdown_audit", "bloom_point_lookup_orders",
+    "zorder_pruning_audit", "metadata_aggregates_audit",
+    "purge_erasure_audit", "fsck_report_audit",
+))
 
-# long-tail suite: skipped by the default run (pytest.ini addopts -m "not slow");
-# select with `-m slow`
-pytestmark = pytest.mark.slow
 
 def _canon_cell(v) -> str:
     if v is None:
@@ -42,7 +49,9 @@ def canon_rows(df: pd.DataFrame) -> list[tuple]:
     return rows
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=() if n in SMOKE else pytest.mark.slow)
+    for n in sorted(REGISTRY)])
 def test_query_matches_oracle(name, spark, sf_dir, duck):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, sf_dir).toPandas()

@@ -35,6 +35,26 @@ def test_read_where_prunes_disjoint_appends(spark, tmp_path):
     assert got == list(range(120, 151))
 
 
+def test_read_where_bound_type_mismatch_keeps_files(spark, tmp_path):
+    """A bound whose type does not compare with the recorded stats (a
+    str bound on an int column) keeps the file -- pruning never
+    raises where the plain filter answers: read_where returns exactly
+    the rows of the same filter over read_current."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "t")
+    for lo in range(0, 40, 10):
+        append_version(_kv(spark, range(lo, lo + 10)).coalesce(1), t,
+                       stats_columns=["k"])
+    plain = read_current(spark, t).filter(
+        (F.col("k") >= F.lit("10")) & (F.col("k") <= F.lit("20")))
+    want = sorted(r.k for r in plain.collect())
+    assert len(want) == 11
+    got = sorted(r.k for r in read_where(spark, t, "k", "10", "20")
+                 .collect())
+    assert got == want
+
+
 def test_stats_inherited_across_statless_appends(spark, tmp_path):
     """An append that doesn't ask for stats must not stop the
     table's skipping: inherited files keep their recorded stats and
