@@ -2009,8 +2009,8 @@ def _prune(table_dir: str, n: int, conjuncts, st=None
       marker) or non-NULL (any other value; transforms
       null-propagate);
     - manifest min/max stats;
-    - manifest null counts (isnull needs a null, notnull a non-null
-      value);
+    - manifest null counts (isnull needs a null; every other op, a
+      comparison or notnull, needs a non-null value);
     - bloom filters for int/str eq/in probes: the consolidated index
       first, then the per-file sidecar (a file the index does not
       cover, or covered as unindexed, falls through to its sidecar).
@@ -2056,9 +2056,8 @@ def _prune(table_dir: str, n: int, conjuncts, st=None
             if op == "isnull":
                 if no_null or nulls == 0:
                     return True
-            elif no_value or (op == "notnull" and nulls is not None
-                              and nulls == rec["n"]):
-                return True
+            elif no_value or (nulls is not None and nulls == rec["n"]):
+                return True  # all NULL: no comparison matches a NULL
             elif rng is not None and _range_excludes(op, val, *rng):
                 return True
         return False

@@ -21,7 +21,26 @@ hold on a 1000-executor cluster reading 100 TB:
   reuse, so every nightly, even an identical re-run of one month,
   recompiled ~400 classes and JIT-compiled them again.  A STATIC
   conf: it takes effect only when the session is first created --
-  ``getOrCreate`` on an existing session keeps the old size.
+  ``getOrCreate`` on an existing session keeps the old size;
+- the DRIVER JVM's C2 tier thresholds raised 3x and the throughput
+  (parallel) collector.  The driver runs Catalyst planning, analysis
+  and codegen: code that is warm for one nightly but not hot.  With
+  the default thresholds C2 compiled it anyway: JIT compiles took
+  38-65% of a steady nightly's process CPU (``jit s`` in
+  ``tools/profile_query.py --nightly``), and the short batch ended
+  before those compiles paid back.  At 3x the JDK 17 tier-4 defaults
+  C2 still compiles the hot loops (a steady query's compute does not
+  slow, unlike C1-only JIT) but skips the lukewarm planner code.
+  Executors on a cluster are untouched: they keep G1 and the default
+  tiers for their long-running hot loops (in local mode the driver
+  JVM is the whole engine).  Also a STATIC conf, applied only when
+  ``get_spark`` launches the JVM.  Spark puts
+  ``spark.driver.defaultJavaOptions`` before the caller's
+  ``spark.driver.extraJavaOptions``, so both apply; a caller's own
+  ``defaultJavaOptions`` replaces these.  To choose another
+  collector, override that key: a second GC flag in
+  ``extraJavaOptions`` conflicts with ``-XX:+UseParallelGC`` and the
+  JVM does not start.
 """
 
 from __future__ import annotations
@@ -52,6 +71,15 @@ DEFAULT_CONF: dict[str, str] = {
     # with ~1.7x headroom; the default 100 is below one nightly's
     # working set, so the LRU evicted every class before its reuse.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # driver JVM flags (static: read when get_spark launches the JVM).
+    # The tier-4 (C2) thresholds are JDK 17's defaults 5000/600/15000/
+    # 40000, each x3; see the module docstring and the JIT/GC columns
+    # of tools/profile_query.py --nightly for how they were sized
+    "spark.driver.defaultJavaOptions":
+        "-XX:+UseParallelGC -XX:Tier4InvocationThreshold=15000 "
+        "-XX:Tier4MinInvocationThreshold=1800 "
+        "-XX:Tier4CompileThreshold=45000 "
+        "-XX:Tier4BackEdgeThreshold=120000",
 }
 
 

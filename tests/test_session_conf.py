@@ -6,7 +6,9 @@ coalesces DOWN from the static number).  Explicit conf and the
 SPARK_GRAFT_SHUFFLE_PARTITIONS env override both win over the
 derivation.  The codegen cache holds the engine's plan working set, so
 a nightly DAG run after the first compiles almost nothing, and a
-steady nightly launches no more Spark jobs than its committed budget."""
+steady nightly launches no more Spark jobs than its committed budget.
+The driver JVM runs with the engine's Java options (throughput
+collector, raised C2 thresholds)."""
 
 from __future__ import annotations
 
@@ -20,6 +22,7 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.wareh
     build_warehouse_dag,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.session import (
+    DEFAULT_CONF,
     classes_compiled,
     get_spark,
 )
@@ -42,6 +45,19 @@ def test_shuffle_partitions_derive_from_parallelism(spark,
         assert s3.conf.get("spark.sql.shuffle.partitions") == "99"
     finally:
         s2.conf.set("spark.sql.shuffle.partitions", "4")
+
+
+def test_driver_jvm_runs_the_engine_java_options(spark):
+    """Every flag of ``spark.driver.defaultJavaOptions`` reaches the
+    driver JVM's command line, and its collectors are the parallel
+    collector's: the option is static, so only a session launched by
+    ``get_spark`` shows it."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    args = set(mf.getRuntimeMXBean().getInputArguments())
+    wanted = DEFAULT_CONF["spark.driver.defaultJavaOptions"].split()
+    assert wanted and set(wanted) <= args, (wanted, sorted(args))
+    collectors = {b.getName() for b in mf.getGarbageCollectorMXBeans()}
+    assert collectors == {"PS Scavenge", "PS MarkSweep"}, collectors
 
 
 @pytest.fixture(scope="module")

@@ -14,6 +14,9 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index 
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
     append_version,
+    pruned_files,
+    read_current,
+    read_where,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.sources.versioned_source import (
     _PushdownBatchReader,
@@ -102,13 +105,28 @@ def test_null_and_prefix_pushdown_prune_files(spark, tmp_path):
         .coalesce(1), t)
     r3 = _PushdownBatchReader({"path": t}, 3)
     r3.pushFilters([StringStartsWith(("u",), "z")])
-    assert len(r3.partitions()) == 2  # the aa-ab file stats-pruned
+    # the aa-ab file stats-pruned, the all-null file null-count-pruned
+    assert len(r3.partitions()) == 1
     r4 = _PushdownBatchReader({"path": t}, 3)
     r4.pushFilters([StringStartsWith(("u",), "b")])
     # no file's [lo, hi] intersects [b, c): aa-ab pruned by hi < 'b',
-    # zz pruned by lo >= next('b') == 'c'; only the null file (no
-    # stats recorded for an all-null string column) survives
-    assert len(r4.partitions()) == 1
+    # zz pruned by lo >= next('b') == 'c'; the null file has no stats
+    # (all-null string column) but its null count equals its row
+    # count, and no prefix matches a NULL
+    assert len(r4.partitions()) == 0
+    # read_where on the same table: the all-null file is planned for
+    # no range, and the rows equal a plain filter
+    for lo, hi, planned in (("z", None, 1), ("b", "c", 0),
+                            (None, "ab", 1), ("ab", "ab", 1)):
+        got = read_where(spark, t, "u", lo, hi)
+        plain = read_current(spark, t)
+        if lo is not None:
+            plain = plain.filter(plain.u >= lo)
+        if hi is not None:
+            plain = plain.filter(plain.u <= hi)
+        assert sorted(got.collect()) == sorted(plain.collect()), (lo, hi)
+        files, total = pruned_files(t, 3, "u", lo, hi)
+        assert (len(files), total) == (planned, 3), (lo, hi, files)
 
 
 def test_pushdown_results_match_plain_reader(registered, tmp_path):

@@ -22,13 +22,22 @@ Nightly mode builds the ``nightly_dag`` benchmark workload
 month, then a re-run of it) and then MONTHS steady-state months.  In
 each of those it runs the DAG's jobs one at a time in dependency
 order and prints, per job, the Spark jobs and SQL executions it
-started, the Scan nodes in those executions' plans and the CPU
-seconds of the process tree (driver, JVM, Python workers) it took.  A
-job that scans more often than it has inputs and outputs to read
-computes part of its upstream more than once.  One job at a time
-keeps the counts and the CPU attributable; ``run_all`` runs
-independent jobs concurrently, so the benchmark's wall time is not the
-sum printed here.  Scratch files go under perfbench/.work/profile_nightly;
+started, the Scan nodes in those executions' plans, the CPU seconds
+of the process tree (driver, JVM, Python workers) it took, and the
+JVM's JIT and GC time in it.  A job that scans more often than it has
+inputs and outputs to read computes part of its upstream more than
+once.  ``jit s`` is the delta of the JVM's ``CompilationMXBean``
+total compilation time (C1 and C2 compiler threads), ``gc s`` that of
+the summed ``GarbageCollectorMXBean`` collection times; both are
+elapsed time inside the JVM, not CPU.  They come from the MXBeans
+rather than from sampling per-thread CPU under /proc because JDK 17
+starts and stops compiler threads on demand
+(``UseDynamicNumberOfCompilerThreads``), and a thread's CPU leaves
+/proc with it: in one probe, 10.5 of a month's 19.6 s of JVM CPU was
+in threads that had exited before the month ended, so thread sampling
+misses most of the JIT.  One job at a time keeps the counts and the
+CPU attributable; ``run_all`` runs independent jobs concurrently, so
+the benchmark's wall time is not the sum printed here.  Scratch files go under perfbench/.work/profile_nightly;
 cores are the process's CPU affinity, as in the benchmark.
 """
 
@@ -106,11 +115,15 @@ def nightly(months: int, scale: int, seed: int) -> None:
 
     next_exec = scans = 0
 
-    def counters() -> tuple[int, int, int, float]:
-        """Spark jobs, SQL executions and Scan nodes so far, and the
-        process tree's CPU seconds.  Scans are counted in the plan
-        graphs (the final adaptive plans) of the executions that
-        finished since the previous call."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    jit, gcs = mf.getCompilationMXBean(), mf.getGarbageCollectorMXBeans()
+
+    def counters() -> tuple[int, int, int, float, float, float]:
+        """Spark jobs, SQL executions and Scan nodes so far, the
+        process tree's CPU seconds and the JVM's JIT and GC seconds.
+        Scans are counted in the plan graphs (the final adaptive
+        plans) of the executions that finished since the previous
+        call."""
         nonlocal next_exec, scans
         sc.listenerBus().waitUntilEmpty(30_000)
         while not sql.execution(next_exec).isEmpty():
@@ -120,7 +133,13 @@ def nightly(months: int, scale: int, seed: int) -> None:
                              ("Scan", "BatchScan")))
             next_exec += 1
         return (sc.dagScheduler().nextJobId(), sql.executionsCount(),
-                scans, bench.tree_cpu_s())
+                scans, bench.tree_cpu_s(),
+                jit.getTotalCompilationTime() / 1e3,
+                sum(g.getCollectionTime() for g in gcs) / 1e3)
+
+    def row(d) -> str:
+        return (f"{d[0]:10d}  {d[1]:9d}  {d[2]:5d}  {d[3]:5.2f}  "
+                f"{d[4]:5.2f}  {d[5]:5.2f}")
 
     try:
         wl = NightlyDag(spark, os.path.join(bench.WORK, "profile_nightly"),
@@ -141,17 +160,15 @@ def nightly(months: int, scale: int, seed: int) -> None:
         width = max(map(len, order))
         for p in range(1, months + 1):
             print(f"month {wl.run_date(p):%Y-%m}\n  {'job':<{width}}  "
-                  f"spark jobs  sql execs  scans  cpu s")
-            total = [0, 0, 0, 0.0]
+                  f"spark jobs  sql execs  scans  cpu s  jit s   gc s")
+            total = [0, 0, 0, 0.0, 0.0, 0.0]
             for name in order:
                 before = counters()
                 reg[name].run(spark, wl.run_date(p))
                 delta = [a - b for a, b in zip(counters(), before)]
                 total = [t + d for t, d in zip(total, delta)]
-                print(f"  {name:<{width}}  {delta[0]:10d}  {delta[1]:9d}  "
-                      f"{delta[2]:5d}  {delta[3]:5.2f}")
-            print(f"  {'total':<{width}}  {total[0]:10d}  {total[1]:9d}  "
-                  f"{total[2]:5d}  {total[3]:5.2f}")
+                print(f"  {name:<{width}}  {row(delta)}")
+            print(f"  {'total':<{width}}  {row(total)}")
     finally:
         bench.stop_session(spark)
 
