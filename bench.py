@@ -27,158 +27,29 @@ sys.path.insert(0, REPO)
 from esg_decarbonization_data_integration_and_data_pipline_spark.session import get_spark  # noqa: E402
 from esg_decarbonization_data_integration_and_data_pipline_spark.plans.queries import REGISTRY  # noqa: E402
 
+# The frozen headline set, compared query by query across runs.
 HEADLINE = [
-    "pricing_summary",
-    "ytm_running_sum",
-    "rollup_region_nation",
-    "brand_revenue",
-    "asof_latest_order_at_event",
-    "latest_order_per_customer",
-    "unpivot_lineitem_measures",
-    "fill_missing_part_revenue",
-    "multi_key_order_lines",
-    "monthly_order_calendar",
-    # training-data-pipeline surface (scale paths, not the exact
-    # quadratic verifiers)
-    "text_fingerprint",
-    "text_quality",
-    "dedup_minhash_verified",
-    "similarity_topk",
-    "similarity_lsh_buckets",
-    "similarity_ivf_topk",
-    "events_tumbling_agg",
-    # added round 8 (r7 verdict task #5): both are curation-pipeline
-    # gates since r7 and were invisible to per-round bench deltas.
-    # r8-vs-r7 total comparisons must subtract these two entries --
-    # the prior 17-query set is the comparable prefix.
-    "text_normalize_docs",
-    "decontaminate_spans_docs",
-    # added round 9: the two new head-graded curation ops (same
-    # discipline -- totals compare on the 17-query prefix, reported
-    # separately via prefix17_total/prefix17_min)
-    "pii_redact_docs",
-    "dedup_bloom_incremental",
-    # added late round 9: the session's new head-graded tiers
-    # (retrieval, data-quality, drift); same prefix17 discipline
-    "bm25_retrieval_docs",
-    "data_quality_report",
-    "drift_orders_psi",
-    # added round 10: the two new head-graded queries (cost-routed
-    # versioned-table audit incl. its three fixture commits, and the
-    # one-row drift summaries); totals compare on the prefix17 and
-    # prefix24 series
-    "versioned_table_audit",
-    "drift_ks_summary",
-    # added round 11: the four lakehouse audits over the SHARED
-    # memoized fixture (plans/fixtures.py) -- the first query to run
-    # pays the 3-commit build once, every later sample/query reuses
-    # it (versioned_table_audit's r10 fixture-build overhead moved
-    # there too).  Totals compare on prefix17/prefix24/prefix26.
-    "purge_erasure_audit",
-    "constraints_history_audit",
-    "ddl_timetravel_audit",
-    "bloom_point_lookup_orders",
-    # added round 11: the SCD2 tier -- the dim build is the memoized
-    # shared fixture (first query to run pays it), the fact join is
-    # the equi-join + residual-interval plan over it
-    "scd2_customer_history",
-    "scd2_asof_fact_join",
-    # added round 11: zero-copy shallow clone + COW divergence (the
-    # clone itself is one manifest write; the audit's read-back and
-    # the keyed delete are what cost)
-    "clone_divergence_audit",
-    # added round 11: lakehouse fsck (footer-truth verification of
-    # the healthy fixture + a tampered copy; one executor-parallel
-    # footer job per table)
-    "fsck_report_audit",
-    # added round 12: the Python-DataSource face (time travel reads
-    # every fixture version through format('versioned_table') --
-    # deliberately measuring the documented ~3.7x Arrow-transfer
-    # cost; the stream audit drains the whole fixture through the
-    # engine-checkpointed tail) and the vacuum/clone retention
-    # audit (compaction + vacuum + clone reads dominate).  Totals
-    # compare on prefix17/prefix24/prefix26; prefix34 is this
-    # round's new extended series.
-    "datasource_timetravel_audit",
-    "datasource_stream_tail_audit",
-    "vacuum_retention_audit",
-    # added round 12: the row-level change feed (readChangeFeed) --
-    # stream drain of the full fixture history + the batch CDF face;
-    # the v3 delete's executor-side multiset diff is the cost
-    "datasource_cdf_audit",
-    # added round 12: filter pushdown through the format() face --
-    # the clustering compaction + bloom build dominate; the five
-    # pruned probes are the measured contract
-    "datasource_pushdown_audit",
-    # added round 12: the write face -- three batch commits + a
-    # 2-drain exactly-once streaming sink, all Arrow-staged
-    "datasource_write_audit",
-    # added round 12 (late): zero-copy column rename (column
-    # mapping) -- the rename is one metadata commit; the five-version
-    # read-back plus the metadata-answered count_where per version is
-    # the measured contract
-    "rename_column_audit",
-    # added round 12 (late): deletion vectors -- two sidecar-only
-    # delete commits + an append; the six-version read-back (dv
-    # anti-joins on versions 4-6) and the metadata rowcounts are the
-    # measured contract
-    "dv_delete_audit",
-    # added round 13: the r13 head tiers -- the frozen-merge BPE
-    # encoder (one Arrow kernel pass over every document), Hive-
-    # partitioned layout pruning (the snapshot build is memoized;
-    # the three pruned reads are the measured contract), and the
-    # metadata-answered aggregates (zero-/boundary-scan by
-    # construction).  Totals compare on prefix17/24/26/34; the full
-    # r12 42-query set is pinned as prefix42.
-    "bpe_encode_docs",
-    "partition_pruning_audit",
-    "metadata_aggregates_audit",
-    # added round 13 (late): dynamic partition overwrite -- the
-    # memoized build pays the partitioned load + two replace commits
-    # once; the graded read-back (current + time travel) is measured
-    "replace_partitions_audit",
-    # added round 14: the writer-face dynamic partition overwrite
-    # twin (memoized build: writer load + dynamic reload + replay +
-    # refusal; measured = the two format() reads) and the graded BPE
-    # TRAINER (one corpus scan -> vocab-sized driver merge loop ->
-    # one Arrow encode pass; the whole pipeline is the measured
-    # contract).  Totals compare on prefix17/24/26/34/42; the r13
-    # 46-query set is prefix46.
-    "writer_replace_audit",
-    "bpe_tokenize_docs",
-    # added round 14 (late): hidden partitioning -- the two
-    # transform-layout builds are memoized; the measured contract is
-    # the three pruned reads (function range, pushdown range, bucket
-    # equality)
-    "hidden_partition_audit",
-    # added round 14 (late): exact-substring dedup (ExactSubstr,
-    # rolling-window) -- one gram-hash exchange (16-byte md5 keys)
-    # carrying every occurrence, then occurrence-bounded island
-    # merge; the excision variant adds the corpus-sized token-filter
-    # rebuild.  prefix49 pins the r14 set before these two.
-    "exact_substring_spans_docs",
-    "exact_substring_dedup_docs",
-    # added round 14 (late): Z-order data skipping -- the
-    # unclustered write + OPTIMIZE ZORDER build is memoized; the
-    # measured contract is the three pruned reads (two 1-D ranges +
-    # the 2-D tile conjunction)
-    "zorder_pruning_audit",
-    # added round 14 (late): conditional multi-clause MERGE -- the
-    # snapshot + two merge commits are memoized; the measured
-    # contract is the three version read-backs
-    "merge_clauses_audit",
-    # added round 14 (late): metadata-answered NDV -- the copy +
-    # per-file HLL sidecar builds are memoized; the measured
-    # contract is nine zero-job register merges + three exact
-    # count-distinct anchor jobs
-    "ndv_metadata_audit",
-    # added round 15: the now-hash-graded sketch query (one-scan
-    # distributed HLL via hll_group_ndv + exact percentiles) and the
-    # histogram metadata tier (copy + sidecar builds memoized; the
-    # measured contract is eighteen zero-job quantile/range walks +
-    # three exact range-count anchor jobs).  prefix54 pins the r14
-    # close set ahead of these two.
-    "approx_sketches",
+    "pricing_summary", "ytm_running_sum", "rollup_region_nation",
+    "brand_revenue", "asof_latest_order_at_event", "latest_order_per_customer",
+    "unpivot_lineitem_measures", "fill_missing_part_revenue",
+    "multi_key_order_lines", "monthly_order_calendar", "text_fingerprint",
+    "text_quality", "dedup_minhash_verified", "similarity_topk",
+    "similarity_lsh_buckets", "similarity_ivf_topk", "events_tumbling_agg",
+    "text_normalize_docs", "decontaminate_spans_docs", "pii_redact_docs",
+    "dedup_bloom_incremental", "bm25_retrieval_docs", "data_quality_report",
+    "drift_orders_psi", "versioned_table_audit", "drift_ks_summary",
+    "purge_erasure_audit", "constraints_history_audit", "ddl_timetravel_audit",
+    "bloom_point_lookup_orders", "scd2_customer_history",
+    "scd2_asof_fact_join", "clone_divergence_audit", "fsck_report_audit",
+    "datasource_timetravel_audit", "datasource_stream_tail_audit",
+    "vacuum_retention_audit", "datasource_cdf_audit",
+    "datasource_pushdown_audit", "datasource_write_audit",
+    "rename_column_audit", "dv_delete_audit", "bpe_encode_docs",
+    "partition_pruning_audit", "metadata_aggregates_audit",
+    "replace_partitions_audit", "writer_replace_audit", "bpe_tokenize_docs",
+    "hidden_partition_audit", "exact_substring_spans_docs",
+    "exact_substring_dedup_docs", "zorder_pruning_audit",
+    "merge_clauses_audit", "ndv_metadata_audit", "approx_sketches",
     "histogram_quantile_audit",
 ]
 
@@ -297,34 +168,8 @@ def main() -> None:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    # variance guard (r8->r9): three fresh-session runs of the SAME
-    # binary spanned 10.37-11.29 s on the 17-query prefix (8.9% of
-    # min; BENCH_LOG ts 1786747323/1786748119/1786748186), which
-    # brackets the r7-vs-r8 "drift" entirely -- round-over-round
-    # medians within ~10% are session noise, not regressions.  Two
-    # fields make that callable from a single entry: the stable
-    # comparable prefix total, and the intra-run sample dispersion.
-    # the comparable prefix IS the headline's first 17 entries; new
-    # queries append to HEADLINE, so deriving (instead of copying)
-    # keeps the cross-round number alive by construction -- if a
-    # future round reorders the early HEADLINE, this line is the one
-    # place the comparability contract lives
-    # declared comparable prefixes: (length, pinned last entry).
-    # prefix17 = the r1-r8 set; prefix24 adds the r9 tiers (r9
-    # verdict task #3) so r11+ has a two-round window for them.  New
-    # rounds APPEND to HEADLINE and, when they grow it, declare one
-    # more (length, sentinel) pair here -- one loop, no copied blocks
-    PREFIXES = [(17, "events_tumbling_agg"), (24, "drift_orders_psi"),
-                (26, "drift_ks_summary"), (34, "fsck_report_audit"),
-                (42, "dv_delete_audit"),
-                (46, "replace_partitions_audit"),
-                (49, "hidden_partition_audit"),
-                (54, "ndv_metadata_audit")]
-    for plen, sentinel in PREFIXES:
-        assert len(HEADLINE) >= plen and HEADLINE[plen - 1] == sentinel, \
-            f"HEADLINE's first {plen} entries are a cross-round " \
-            f"comparable prefix ending at {sentinel} -- append new " \
-            f"queries, don't reorder the head"
+    # intra-run sample dispersion: three fresh-session runs of unchanged
+    # code spread 8.9% on a 17-query total, so moves within ~10% are noise
     spreads = sorted(
         100.0 * (max(r) - min(r)) / (sorted(r)[len(r) // 2] or 1.0)
         for r in samples.values() if len(r) > 1)
@@ -356,13 +201,6 @@ def main() -> None:
     }
     if subset:
         out["subset"] = True
-    for plen, _sentinel in PREFIXES:
-        prefix = HEADLINE[:plen]
-        if all(q in timings for q in prefix):
-            out[f"prefix{plen}_total"] = round(
-                sum(timings[q] for q in prefix), 3)
-            out[f"prefix{plen}_min"] = round(
-                sum(minimums[q] for q in prefix), 3)
     if spreads:
         out["sample_spread_pct"] = round(spreads[len(spreads) // 2], 1)
     if errors:

@@ -1,7 +1,7 @@
 """Declared queries, part 2: training-data-pipeline operators
 (dedup, similarity search, text analysis, multimodal) plus the
-remaining relational families (quantiles, CAGR/IRR UDAFs, streaming
-analog, JSON extraction).
+remaining relational families (IRR UDAF, streaming analog, JSON
+extraction).
 
 Registered into the same REGISTRY as plans/queries.py; oracles use
 only engine-independent arithmetic (polynomial hashes, md5/sha256,
@@ -695,59 +695,9 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Remaining relational families: quantile (A9), CAGR (A8-ish), IRR
-# UDAF (A8/UD3), streaming-analog windowed agg, JSON extract (F13)
+# Remaining relational families: IRR UDAF (A8/UD3), streaming-analog
+# windowed agg, JSON extract (F13)
 # --------------------------------------------------------------------------
-
-@register("quantile_acctbal", "A9", oracle="""
-SELECT c_nationkey,
-       round(quantile_cont(c_acctbal, 0.25), 4) AS q25,
-       round(quantile_cont(c_acctbal, 0.50), 4) AS q50,
-       round(quantile_cont(c_acctbal, 0.75), 4) AS q75
-FROM customer
-GROUP BY c_nationkey
-""")
-def quantile_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles per group (reference clamps via
-    np.quantile: Model/Factory_elect_simulator_update.py:220,233)."""
-    c = table(spark, sf_dir, "customer")
-    return (c.groupBy("c_nationkey")
-             .agg(F.round(F.expr("percentile(c_acctbal, 0.25)"), 4).alias("q25"),
-                  F.round(F.expr("percentile(c_acctbal, 0.50)"), 4).alias("q50"),
-                  F.round(F.expr("percentile(c_acctbal, 0.75)"), 4).alias("q75")))
-
-
-@register("cagr_nation_revenue", "A8,F10", oracle="""
-WITH y AS (
-  SELECT c.c_nationkey, CAST(year(o.o_orderdate) AS INT) AS yr,
-         round(sum(o.o_totalprice), 4) AS total
-  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-  GROUP BY 1, 2
-)
-SELECT c_nationkey,
-       min(yr) AS first_year, max(yr) AS last_year,
-       round(power(arg_max(total, yr) / arg_min(total, yr),
-             1.0 / nullif(max(yr) - min(yr), 0)) - 1, 6) AS cagr
-FROM y
-GROUP BY c_nationkey
-""")
-def cagr_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CAGR over yearly revenue series per nation -- the reference's
-    cagr_func UDAF (Model/Factory_elect_simulator_update.py:205-211)
-    expressed with min_by/max_by instead of Python."""
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    y = (o.join(c, c.c_custkey == o.o_custkey)
-          .groupBy("c_nationkey", F.year("o_orderdate").cast("int").alias("yr"))
-          .agg(F.round(F.sum("o_totalprice"), 4).alias("total")))
-    return (y.groupBy("c_nationkey")
-             .agg(F.min("yr").alias("first_year"),
-                  F.max("yr").alias("last_year"),
-                  F.round(
-                      F.pow(F.expr("max_by(total, yr)") / F.expr("min_by(total, yr)"),
-                            1.0 / F.nullif(F.max("yr") - F.min("yr"), F.lit(0))) - 1,
-                      6).alias("cagr")))
-
 
 @register("irr_by_brand", "A8,UD3,UD2", oracle="""
 WITH RECURSIVE y AS (

@@ -1,12 +1,12 @@
 """Declared queries, part 3: the remaining SURVEY.md §2 rows --
 self-joins on derived frames (J8), set ops (U2/U4), limits (O3),
-string/timestamp formatting (F7/F8), scalar Pandas UDF (UD1), and
-the external-model-API stub via mapInPandas (UD5).
+string/timestamp formatting (F7/F8), and the external-model-API
+stub via mapInPandas (UD5).
 """
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves stringized type hints here
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.tables import table
@@ -84,34 +84,6 @@ def concat_format_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws("|", F.col("event_type"),
                     F.col("user_id").cast("string")).alias("event_key"),
         fmt.alias("ts_formatted"))
-
-
-@register("pandas_udf_zscore", "UD1", oracle="""
-WITH s AS (SELECT avg(c_acctbal) AS mu, stddev_samp(c_acctbal) AS sigma FROM customer)
-SELECT c.c_custkey,
-       round((c.c_acctbal - s.mu) / s.sigma, 6) AS acctbal_z
-FROM customer c CROSS JOIN s
-""")
-def pandas_udf_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar (Arrow-vectorized) Pandas UDF -- the UD1 surface. The
-    z-score body is deliberately trivial so the oracle can reproduce
-    it; real uses are library calls with no SQL equivalent. The
-    mean/std come in as broadcast scalars, the UDF is pure
-    per-batch arithmetic (no state)."""
-    from pyspark.sql.functions import pandas_udf
-
-    c = table(spark, sf_dir, "customer")
-    stats = c.agg(F.avg("c_acctbal").alias("mu"),
-                  F.stddev_samp("c_acctbal").alias("sigma"))
-
-    @pandas_udf("double")
-    def zscore(v: pd.Series, mu: pd.Series, sigma: pd.Series) -> pd.Series:
-        return (v - mu) / sigma
-
-    return (c.crossJoin(F.broadcast(stats))
-             .select("c_custkey",
-                     F.round(zscore("c_acctbal", "mu", "sigma"), 6)
-                      .alias("acctbal_z")))
 
 
 @register("greedy_allocation", "UD4,W2,W1", oracle="""
@@ -238,7 +210,7 @@ def approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, codegen'd JVM kernel), so the DuckDB oracle re-derives
     the EXACT estimates instead of the r3-r14 rows-only band check.
     The quantile half grades as exact interpolated percentiles
-    (percentile == quantile_cont, the quantile_acctbal pairing);
+    (Spark percentile == DuckDB quantile_cont);
     exact distinct counts ride along as the reality anchor --
     tests/test_sketches.py still bounds the HLL error against them
     (the meaningful contract for an approximate operator)."""
@@ -304,24 +276,6 @@ def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
                            F.when(F.col("__g2") == 1, F.lit("ALL"))
                             .otherwise(F.col("o_orderpriority")))
                .drop("__g1", "__g2"))
-
-
-@register("count_distinct_parts", "A4,A2", oracle="""
-SELECT l_returnflag,
-       count(DISTINCT l_partkey) AS n_parts,
-       count(DISTINCT l_suppkey) AS n_suppliers,
-       count(*) AS n_lines
-FROM lineitem
-GROUP BY l_returnflag
-""")
-def count_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact multi-column distinct counting (expands to a two-phase
-    aggregate; AQE handles the expanded shuffle)."""
-    li = table(spark, sf_dir, "lineitem")
-    return (li.groupBy("l_returnflag")
-              .agg(F.countDistinct("l_partkey").alias("n_parts"),
-                   F.countDistinct("l_suppkey").alias("n_suppliers"),
-                   F.count(F.lit(1)).alias("n_lines")))
 
 
 @register("forecast_revenue", "A8,F10,W5,J4", oracle="""

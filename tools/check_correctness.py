@@ -6,8 +6,9 @@ over the same parquet tables, then compares row count, column names,
 and an order-insensitive value multiset (floats compared at full
 precision via repr — queries already round at aggregation boundaries,
 so full-precision comparison stays float-noise-safe while catching the
-real divergences that a 6-sig-digit canonicalization masked, e.g. the
-round-1 pow_floor_round_pricing 4th-decimal tie). Use while iterating:
+real divergences that a 6-sig-digit canonicalization masks, e.g. a
+4th-decimal rounding tie). Covers all 128 registered queries. Use
+while iterating:
 
     python tools/check_correctness.py [--sf /root/testdata/sf0.01] [names...]
 """
