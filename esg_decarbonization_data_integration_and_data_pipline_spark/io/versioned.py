@@ -883,19 +883,18 @@ def _apply_dv(spark: SparkSession, table_dir: str,
               dvs: dict[str, tuple[str, int]]) -> DataFrame:
     """Anti-filter ``df_with_pos`` (a ``with_pos`` :func:`_read_files`
     frame) against the given deletion vectors and drop the row-identity
-    columns.  The (suffix-key, position) pairs frame is built
+    columns.  The (scan key, position) pairs frame is built
     driver-side through Arrow (positions are control-plane sized;
     manifest-recorded counts pick broadcast vs shuffle without
     decoding first)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    _dv_suffix_map(dvs)  # loud failure on a scan-key collision
+    scan_key = _dv_scan_keys(df_with_pos, dvs)
     keys, poss = [], []
     for f, (dv_rel, _cnt) in sorted(dvs.items()):
-        sfx = _dv_suffix(f)
         for p in _dv_positions(table_dir, dv_rel):
-            keys.append(sfx)
+            keys.append(scan_key[f])
             poss.append(p)
     if not keys:  # all-empty vectors: nothing to filter
         return df_with_pos.drop("__dv_file", "__dv_pos")
@@ -1126,7 +1125,7 @@ def _manifest_lines(vdir: str) -> list[str] | None:
     """The raw lines of ``vdir``'s ``_MANIFEST`` in file order, or
     None when it has none (a snapshot version)."""
     try:
-        with open(os.path.join(vdir, _MANIFEST), encoding="ascii") as fh:
+        with open(os.path.join(vdir, _MANIFEST), encoding="utf-8") as fh:
             return fh.read().splitlines()
     except OSError:
         return None
@@ -1140,7 +1139,7 @@ def _write_manifest(vdir: str, lines: list[str]) -> None:
     rewrites committed ones in place."""
     p = os.path.join(vdir, _MANIFEST)
     tmp = p + ".tmp"
-    with open(tmp, "w", encoding="ascii") as fh:
+    with open(tmp, "w", encoding="utf-8") as fh:
         fh.write("\n".join(lines) + "\n")
     os.replace(tmp, p)
 
@@ -1270,33 +1269,64 @@ _BASE_PREFIX = "#base "
 _OP_PREFIX = "#op "
 _DV_PREFIX = "#dv "
 _DV_MAGIC = b"DV2\x00"
-# the scan-side <-> manifest-side join key for deletion vectors: the
+# the manifest-side identity of a data file for deletion vectors: the
 # trailing version-dir path of a data file reference, INCLUDING any
 # Hive partition segments between the version dir and the file name
 # (r13: 'v_N/yr=2000/part.parquet' must key whole, or partitioned
 # dv-deletes mis-join).  The negative lookahead anchors the match at
 # the LAST v_N segment, so an ancestor directory that happens to be
-# v_N-shaped cannot desynchronize the two sides.  ONE pattern shared
-# by _dv_suffix and every F.regexp_extract site -- a drifted copy
-# would make the anti-join silently filter nothing (review r12e-5);
-# Python re and Java regex agree on this construct (pinned by
-# tests/test_partitioned_layout.py's dv round-trip).
+# v_N-shaped cannot desynchronize a manifest ref from a scan path.
+# The pattern runs only in Python, on the driver (_dv_suffix): it
+# maps a scan's file URIs back to manifest entries once per file,
+# never per row -- the per-row side is _dv_key_col's plain string
+# expression.
 _DV_SUFFIX_PATTERN = r"(v_\d{8}/(?:(?!v_\d{8}/)[^/]+/)*[^/]+)$"
 
 
 def _dv_key_col(file_col: str = "__dv_file"):
-    """The SCAN-side dv join key as a Column: the trailing suffix of
-    ``_metadata.file_path``, URI-DECODED so it compares equal to the
-    literal on-disk names manifests hold.  ``file_path`` is a URI --
-    a partition directory like ``reg=north region`` surfaces as
-    ``reg=north%20region`` and would never match the manifest ref
-    (r13 review finding #1).  ``+`` is pre-escaped because
-    URLDecoder reads it as a space while URI path encoding leaves it
-    literal."""
+    """The SCAN-side dv join key as a Column: the text of
+    ``_metadata.file_path`` after its last ``/v_``, left URI-encoded
+    (no regex, no decode per row).  :func:`_dv_scan_keys` computes the
+    same key from each file's URI on the driver."""
     from pyspark.sql import functions as F
 
-    k = F.regexp_extract(file_col, _DV_SUFFIX_PATTERN, 1)
-    return F.url_decode(F.replace(k, F.lit("+"), F.lit("%2B")))
+    return F.substring_index(file_col, "/v_", -1)
+
+
+def _dv_scan_keys(scan: DataFrame, rel_files) -> dict[str, str]:
+    """manifest-relative path -> scan-side dv join key, for every
+    file of ``rel_files`` in the ``with_pos`` scan ``scan``, resolved
+    once per file on the driver.  ``scan.inputFiles()`` holds the
+    same URI-encoded paths as ``_metadata.file_path`` (scheme prefix
+    aside); each maps back to its manifest entry through its decoded
+    :func:`_dv_suffix` -- ``file_path`` is a URI, so a partition dir
+    like ``reg=north region`` surfaces as ``reg=north%20region``
+    (r13 review finding #1).  A dv-bearing file the scan does not
+    list, or two files sharing a key, raise: either would make the
+    anti-join silently filter nothing (review r12e-5)."""
+    from urllib.parse import unquote
+
+    sfx_to_rel = _dv_suffix_map(rel_files)
+    keys: dict[str, str] = {}
+    owner: dict[str, str] = {}
+    for uri in scan.inputFiles():
+        rel = sfx_to_rel.get(_dv_suffix(unquote(uri)))
+        if rel is None:
+            continue
+        key = uri.rsplit("/v_", 1)[-1]
+        other = owner.setdefault(key, rel)
+        if other != rel:
+            raise RuntimeError(
+                f"deletion-vector scan-key collision: {rel!r} and "
+                f"{other!r} share the scan key {key!r}")
+        keys[rel] = key
+    missing = sorted(set(rel_files) - keys.keys())
+    if missing:
+        raise RuntimeError(
+            f"deletion-vector files {missing} have no scan key: the "
+            f"scan lists none of them, so their masks cannot be "
+            f"applied")
+    return keys
 
 
 def _encode_dv(positions, nrows: int) -> bytes:
@@ -1398,17 +1428,17 @@ def _dv_lines(dvs: dict[str, tuple[str, int]]) -> list[str]:
 
 def _dv_suffix(rel_or_path: str) -> str:
     """The trailing ``v_NNNNNNNN/<name>`` of a data file reference --
-    the join key between scan-side ``_metadata.file_path`` (absolute
-    URI) and manifest-relative refs (including a shallow clone's
-    ``../``-external ones).  Uniqueness rides on uuid part names,
-    the same reliance deep_clone documents."""
+    what matches a decoded scan path (absolute) to a manifest-relative
+    ref (including a shallow clone's ``../``-external ones).
+    Uniqueness rides on uuid part names, the same reliance deep_clone
+    documents."""
     m = re.search(_DV_SUFFIX_PATTERN, rel_or_path)
     return m.group(1) if m else rel_or_path
 
 
 def _dv_suffix_map(rel_files) -> dict[str, str]:
-    """suffix -> manifest-relative path for every file in one
-    suffix-keyed scan, ASSERTING injectivity (r12 ADVICE): a
+    """suffix -> manifest-relative path for every file of one
+    dv-keyed scan, ASSERTING injectivity (r12 ADVICE): a
     basename collision between a clone-local file and a shallow
     clone's ``../``-external ref in the same scan would otherwise
     silently join deletion masks onto the wrong file's rows.  UUID
@@ -3390,19 +3420,21 @@ def _dv_delete_commit(spark: SparkSession, table_dir: str,
     base's existing vectors, and commits a metadata-only version
     whose sidecars hold the unions.  Returns the new version, or
     None when nothing new matched."""
-    from pyspark.sql import functions as F
+    from urllib.parse import unquote
 
-    hits = (matched
-            .select(_dv_key_col().alias("__k"), "__dv_pos")
-            .collect())
+    hits = matched.select("__dv_file", "__dv_pos").collect()
     sfx_to_rel = _dv_suffix_map(candidates)
+    rel_of: dict[str, str | None] = {}
     by_rel: dict[str, set[int]] = {}
     for r in hits:
-        rel = sfx_to_rel.get(r["__k"])
+        uri = r["__dv_file"]
+        if uri not in rel_of:
+            rel_of[uri] = sfx_to_rel.get(_dv_suffix(unquote(uri)))
+        rel = rel_of[uri]
         if rel is None:
             raise RuntimeError(
                 f"{op_name}: scan returned a file outside the "
-                f"candidate set ({r['__k']})")
+                f"candidate set ({uri})")
         by_rel.setdefault(rel, set()).add(int(r["__dv_pos"]))
     dvs = _read_dvs(table_dir, base)
     rowmeta = _read_rowmeta(table_dir, base)
@@ -4437,7 +4469,6 @@ def _dv_change_rows(spark: SparkSession, table_dir: str, st,
     del_pairs: list[tuple[str, int]] = []
     ins_pairs: list[tuple[str, int]] = []
     affected: list[str] = []
-    _dv_suffix_map(files)  # loud failure on a scan-key collision
     for f in files:
         a = set(_dv_positions(table_dir, from_dvs[f][0])) \
             if f in from_dvs else set()
@@ -4446,15 +4477,15 @@ def _dv_change_rows(spark: SparkSession, table_dir: str, st,
         if a == b:
             continue
         affected.append(f)
-        sfx = _dv_suffix(f)
-        del_pairs += [(sfx, p) for p in sorted(b - a)]
-        ins_pairs += [(sfx, p) for p in sorted(a - b)]
+        del_pairs += [(f, p) for p in sorted(b - a)]
+        ins_pairs += [(f, p) for p in sorted(a - b)]
     empty = (spark.createDataFrame([], st)
              .withColumn("_change_type", F.lit("insert")))
     if not affected:
         return empty
-    scan = (_read_files(spark, table_dir, affected, st, with_pos=True)
-            .withColumn("__dv_key", _dv_key_col()))
+    scan = _read_files(spark, table_dir, affected, st, with_pos=True)
+    scan_key = _dv_scan_keys(scan, affected)
+    scan = scan.withColumn("__dv_key", _dv_key_col())
     import pandas as pd
 
     frames = []
@@ -4462,7 +4493,7 @@ def _dv_change_rows(spark: SparkSession, table_dir: str, st,
         if not pairs:
             continue
         pdf = spark.createDataFrame(pd.DataFrame(
-            {"__dv_key": pd.Series([k for k, _ in pairs],
+            {"__dv_key": pd.Series([scan_key[f] for f, _ in pairs],
                                    dtype="object"),
              "__dv_pos": pd.Series([p for _, p in pairs],
                                    dtype="int64")}))
@@ -4496,13 +4527,19 @@ def read_changes(spark: SparkSession, table_dir: str, from_n: int,
       was rewritten), the delta IS the extra files: read them, tag
       ``insert``, done.  O(changed files), exact, no join.
     - row-level multiset diff otherwise (a merge/compaction rewrote
-      files): rows are canonicalized to JSON (field order = schema
-      order), counted per side, and the count difference is emitted
-      as |delta| copies of insert/delete.  A compaction that changed
-      no rows diffs empty.  Caveat: map-typed columns have no
-      canonical JSON order; tables with map columns should diff on an
-      explicit key instead."""
+      files): ONE typed aggregate -- ``from_n``'s rows tagged -1 and
+      ``to_n``'s +1 (a column both sides carry is cast to its ``to``
+      type first), unioned by name, grouped by every column and
+      summed; each group with a non-zero sum is emitted as |sum|
+      copies of insert/delete, projected to the ``to`` schema.  Rows
+      compare with SQL grouping semantics: NULLs are equal, -0.0
+      equals 0.0 and NaN equals NaN.  A top-level map column groups
+      through its entries sorted by key and comes back as a map; a
+      column Spark cannot group (a map nested in a struct or array,
+      an interval, a variant) raises ``TypeError`` naming it.  A
+      compaction that changed no rows diffs empty."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     committed = committed_versions(table_dir, backend=backend)
     if to_n is None:
@@ -4610,28 +4647,65 @@ def read_changes(spark: SparkSession, table_dir: str, from_n: int,
             return left.unionByName(right,
                                     allowMissingColumns=True)
 
-    def counted(n: int):
-        df = _read_resolved(spark, table_dir, n)
-        j = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-        return df.select(j.alias("__j")).groupBy("__j").count()
+    to_df = _read_resolved(spark, table_dir, to_n)
+    schema = to_schema or to_df.schema
+    want = {f.name: f.dataType for f in schema.fields}
 
-    a = counted(from_n).withColumnRenamed("count", "__c1")
-    b = counted(to_n).withColumnRenamed("count", "__c2")
-    delta = (a.join(b, "__j", "full_outer")
-              .select("__j",
-                      (F.coalesce("__c2", F.lit(0))
-                       - F.coalesce("__c1", F.lit(0))).alias("__d"))
-              .filter(F.col("__d") != 0))
-    schema = to_schema or _read_resolved(spark, table_dir, to_n).schema
+    def q(c: str) -> str:
+        return "`" + c.replace("`", "``") + "`"
+
+    def tagged(df: DataFrame, sign: int) -> DataFrame:
+        cols = []
+        for f in df.schema.fields:
+            c, dt = F.col(q(f.name)), want.get(f.name, f.dataType)
+            if dt != f.dataType:
+                c = c.try_cast(dt)
+            key_dt = dt
+            if isinstance(dt, T.MapType):
+                c = F.array_sort(F.map_entries(c))
+                key_dt = T.StructType([T.StructField("key", dt.keyType),
+                                       T.StructField("value",
+                                                     dt.valueType)])
+            if not _groupable(key_dt):
+                raise TypeError(
+                    f"read_changes cannot diff {table_dir} between "
+                    f"v_{from_n} and v_{to_n}: column {f.name!r} of "
+                    f"type {dt.simpleString()} cannot be grouped")
+            cols.append(c.alias(f.name))
+        return df.select(*cols, F.lit(sign).alias("__d"))
+
+    both = tagged(_read_resolved(spark, table_dir, from_n), -1) \
+        .unionByName(tagged(to_df, 1), allowMissingColumns=True)
+    delta = (both.groupBy(*[q(c) for c in both.columns if c != "__d"])
+             .agg(F.sum("__d").alias("__d"))
+             .filter(F.col("__d") != 0))
+    out = []
+    for f in schema.fields:
+        c = F.col(q(f.name))
+        if isinstance(f.dataType, T.MapType):
+            c = F.map_from_entries(c)
+        out.append(c.cast(f.dataType).alias(f.name))
     return (delta
-            .withColumn("_change_type",
-                        F.when(F.col("__d") > 0, "insert")
-                         .otherwise("delete"))
             .withColumn("__i", F.explode(
                 F.sequence(F.lit(1), F.abs(F.col("__d")))))
-            .select(F.from_json("__j", schema).alias("__r"),
-                    "_change_type")
-            .select("__r.*", "_change_type"))
+            .select(*out, F.when(F.col("__d") > 0, "insert")
+                    .otherwise("delete").alias("_change_type")))
+
+
+def _groupable(dt) -> bool:
+    """Whether Spark can group by a column of type ``dt`` (its
+    ordering rule: maps, intervals and variants anywhere inside are
+    not)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return all(_groupable(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _groupable(dt.elementType)
+    if isinstance(dt, T.UserDefinedType):
+        return _groupable(dt.sqlType())
+    return not isinstance(dt, (T.MapType, T.CalendarIntervalType,
+                               T.VariantType))
 
 
 def consume_changes(spark: SparkSession, table_dir: str,

@@ -112,9 +112,10 @@ applies them executor-side (each partition carries its file's
 encoded sidecar; readers mask rows by file offset); a dv-only commit
 plans O(changed-rows) position partitions in the feed, and diff
 partitions carry per-side masks so a merge of a dv-bearing file
-never re-emits already-deleted rows as spurious deletes.  Rows are
-canonicalized in pinned-schema field order exactly like
-io.versioned.read_changes, including its map-column caveat.
+never re-emits already-deleted rows as spurious deletes.  Diff rows
+compare with the same equality as io.versioned.read_changes' typed
+grouping: NULLs equal, -0.0 equal to 0.0, NaN equal to NaN, map
+entries compared sorted by key.
 Semantics note: this face is PER-COMMIT (Delta's CDF -- a row
 inserted then deleted inside a multi-commit range surfaces as BOTH
 changes, each attributed to its commit), whereas read_changes nets a
@@ -400,10 +401,11 @@ def _read_change_file(part: "_ChangeFilePart"):
 
 def _read_change_diff(part: "_ChangeDiffPart"):
     """Executor-side multiset diff of one rewrite commit: rows are
-    canonicalized to a JSON key in pinned-schema field order (the
-    same canonicalization contract as io.versioned.read_changes,
-    including its map-column caveat) and the per-side count
-    difference is emitted as |delta| copies of delete/insert.  With
+    keyed by a JSON list in pinned-schema field order, with the same
+    equality as io.versioned.read_changes' grouped diff (-0.0 keyed
+    as 0.0, NaN equal to NaN, NULLs equal, map entries sorted by key
+    -- see :func:`_canonicalizer`), and the per-side count difference
+    is emitted as |delta| copies of delete/insert.  With
     ``n_buckets > 1`` (a sharded large commit) only the rows whose
     key hash lands in this partition's bucket are counted -- the
     per-key hash assignment is identical on both sides, so each
@@ -416,7 +418,7 @@ def _read_change_diff(part: "_ChangeDiffPart"):
     import pyarrow.ipc as ipc
 
     base = ipc.read_schema(pa.BufferReader(part.arrow_schema_bytes))
-    names = base.names
+    canon = [(f.name, _canonicalizer(f.type)) for f in base]
     out_schema = _cdf_arrow_schema(part.arrow_schema_bytes)
     nb, mine = part.n_buckets, part.bucket
 
@@ -427,8 +429,10 @@ def _read_change_diff(part: "_ChangeDiffPart"):
             for batch in _read_aligned(p, part.arrow_schema_bytes,
                                        dv.get(p)):
                 for row in batch.to_pylist():
-                    k = json.dumps([row.get(f) for f in names],
-                                   default=str, ensure_ascii=False)
+                    k = json.dumps(
+                        [row.get(f) if c is None else c(row.get(f))
+                         for f, c in canon],
+                        default=str, ensure_ascii=False)
                     if nb > 1 and int.from_bytes(
                             hashlib.md5(k.encode("utf-8"))
                             .digest()[:4], "little") % nb != mine:
@@ -455,6 +459,39 @@ def _read_change_diff(part: "_ChangeDiffPart"):
             for batch in tbl.to_batches():
                 yield _with_change_cols(batch, out_schema,
                                         change_type, part.version)
+
+
+def _canonicalizer(t):
+    """The key function of one arrow type's values for the change
+    diff, or None where a value keys as itself: floats map -0.0 to
+    0.0 (NaN keys as NaN), maps sort their entries by key, and
+    structs and lists canonicalize their children -- SQL grouping
+    equality, as read_changes' typed aggregate applies it."""
+    import json
+
+    import pyarrow as pa
+
+    if pa.types.is_floating(t):
+        return lambda v: None if v is None else v + 0.0
+    if pa.types.is_map(t):
+        kc = _canonicalizer(t.key_type) or (lambda v: v)
+        vc = _canonicalizer(t.item_type) or (lambda v: v)
+        return lambda v: None if v is None else sorted(
+            ([kc(k), vc(x)] for k, x in v),
+            key=lambda e: json.dumps(e[0], default=str))
+    if pa.types.is_struct(t):
+        subs = [(f.name, _canonicalizer(f.type)) for f in t]
+        if all(c is None for _, c in subs):
+            return None
+        return lambda v: None if v is None else {
+            n: v[n] if c is None else c(v[n]) for n, c in subs}
+    if (pa.types.is_list(t) or pa.types.is_large_list(t)
+            or pa.types.is_fixed_size_list(t)):
+        ec = _canonicalizer(t.value_type)
+        if ec is None:
+            return None
+        return lambda v: None if v is None else [ec(x) for x in v]
+    return None
 
 
 def _read_change_part(part):

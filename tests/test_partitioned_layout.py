@@ -10,8 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-    _data_files, _partition_values, pruned_files, read_current,
-    read_where, write_version,
+    _data_files, _partition_values, _read_dvs, pruned_files,
+    read_current, read_where, write_version,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.sources.versioned_source import (
     _PushdownBatchReader, register as register_ds,
@@ -389,6 +389,50 @@ def test_dv_delete_on_url_encoded_partition_value(spark, tmp_path):
     dels = {(r.id, r.reg) for r in
             ch.filter("_change_type = 'delete'").collect()}
     assert dels == {(1, "north region"), (3, "north region")}
+
+
+def test_dv_keys_on_awkward_partition_paths(spark, tmp_path):
+    """The dv join key survives partition values with a space, ``+``,
+    ``%`` and non-ASCII characters under a partition column whose
+    name starts with ``v_``: every dv-masked read, the dv-tier change
+    feed and the compaction equal a pandas model row for row."""
+    import pandas as pd
+
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
+        delete_keys_dv, maybe_compact, read_changes, read_versions,
+    )
+
+    regs = ["north region", "a+b", "100%", "Zürich 東京", "plain"]
+    model = pd.DataFrame({"id": range(20),
+                          "v_reg": [regs[i % 5] for i in range(20)]})
+    td = str(tmp_path / "awk")
+    v1 = write_version(spark.createDataFrame(model), td,
+                       partition_by=("v_reg",))
+    gone = [1, 2, 3, 4, 9, 15]
+    v2 = delete_keys_dv(spark, td, spark.createDataFrame(
+        [(i,) for i in gone], "id bigint"), "id")
+    live = model[~model.id.isin(gone)]
+
+    def rows(df, cols=("id", "v_reg")):
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    def want(pdf, cols=("id", "v_reg")):
+        return sorted(tuple(t) for t in pdf[list(cols)].itertuples(
+            index=False))
+
+    assert rows(read_current(spark, td)) == want(live)
+    both = pd.concat([model.assign(__version=v1),
+                      live.assign(__version=v2)])
+    cols = ("__version", "id", "v_reg")
+    assert rows(read_versions(spark, td, [v1, v2]), cols) \
+        == want(both, cols)
+    cols = ("id", "v_reg", "_change_type")
+    assert rows(read_changes(spark, td, v1, v2), cols) == want(
+        model[model.id.isin(gone)].assign(_change_type="delete"), cols)
+    v3 = maybe_compact(spark, td, max_dv_fraction=0.01,
+                       partition_by=["v_reg"])
+    assert v3 is not None and not _read_dvs(td, v3)
+    assert rows(read_current(spark, td)) == want(live)
 
 
 def test_fsck_partitioned_unreferenced_sweep(spark, tmp_path):

@@ -8,7 +8,7 @@ of appends, upserts, keyed deletes and compactions,
    attribution composing correctly end-to-end;
 2. the batch CDF face over random (from, to] ranges must equal
    io.versioned.read_changes row-for-row (the executor-side pyarrow
-   diff vs the Spark-side JSON-canonicalized diff).
+   diff vs the Spark-side grouped multiset diff).
 
 Derandomized seeds, same discipline as the merge/DDL property
 sweeps."""

@@ -5,6 +5,7 @@ run in one session.
 Usage:
     python tools/profile_query.py NAME [--runs N] [--sf DIR]
     python tools/profile_query.py --nightly MONTHS [--scale N] [--seed S]
+    python tools/profile_query.py --lakehouse PASSES [--seed S]
 
 Query mode runs NAME N times through the noop sink and prints, per
 run, its wall time, Spark jobs and the generated classes Spark
@@ -39,6 +40,13 @@ misses most of the JIT.  One job at a time keeps the counts and the
 CPU attributable; ``run_all`` runs independent jobs concurrently, so
 the benchmark's wall time is not the sum printed here.  Scratch files go under perfbench/.work/profile_nightly;
 cores are the process's CPU affinity, as in the benchmark.
+
+Lakehouse mode builds the ``lakehouse_rw`` benchmark workload (its
+seeded versioned table and the two registry queries' inputs), runs its
+warm-up pass and then PASSES timed passes, printing per op the same
+columns as nightly mode.  Each op's untimed preparation and output
+check run outside the counted window, as in the benchmark.  Scratch
+files go under perfbench/.work/profile_lakehouse.
 """
 
 from __future__ import annotations
@@ -60,15 +68,22 @@ def main() -> None:
                     help="test-data directory (default $SPARK_GRAFT_SF_DIR)")
     ap.add_argument("--nightly", type=int, metavar="MONTHS",
                     help="profile the nightly DAG for MONTHS steady months")
+    ap.add_argument("--lakehouse", type=int, metavar="PASSES",
+                    help="profile lakehouse_rw for PASSES timed passes")
     ap.add_argument("--scale", type=int, default=3,
                     help="nightly input scale (default 3, the benchmark's)")
     ap.add_argument("--seed", type=int, default=11,
-                    help="nightly input seed (default 11)")
+                    help="workload input seed (default 11)")
     args = ap.parse_args()
-    if (args.name is None) == (args.nightly is None):
-        ap.error("pass a query NAME or --nightly MONTHS")
+    modes = [args.name, args.nightly, args.lakehouse]
+    if sum(m is not None for m in modes) != 1:
+        ap.error("pass a query NAME, --nightly MONTHS or --lakehouse "
+                 "PASSES")
     if args.nightly is not None:
         nightly(args.nightly, args.scale, args.seed)
+        return
+    if args.lakehouse is not None:
+        lakehouse(args.lakehouse, args.seed)
         return
     if not args.sf:
         ap.error("pass --sf or set SPARK_GRAFT_SF_DIR")
@@ -103,45 +118,80 @@ def main() -> None:
     spark.stop()
 
 
-def nightly(months: int, scale: int, seed: int) -> None:
-    sys.path.insert(0, os.path.join(REPO, "perfbench"))
-    import run as bench
-    from workloads import NightlyDag
+class Counters:
+    """Spark jobs, SQL executions and Scan nodes so far, the process
+    tree's CPU seconds and the JVM's JIT and GC seconds."""
 
-    bench.bootstrap()
-    spark = bench.start_session(len(os.sched_getaffinity(0)))
-    sc = spark.sparkContext._jsc.sc()
-    sql = spark._jsparkSession.sharedState().statusStore()
+    HEADER = "spark jobs  sql execs  scans  cpu s  jit s   gc s"
 
-    next_exec = scans = 0
+    def __init__(self, spark, bench) -> None:
+        self.bench = bench
+        self.sc = spark.sparkContext._jsc.sc()
+        self.sql = spark._jsparkSession.sharedState().statusStore()
+        mf = spark._jvm.java.lang.management.ManagementFactory
+        self.jit = mf.getCompilationMXBean()
+        self.gcs = mf.getGarbageCollectorMXBeans()
+        self.next_exec = self.scans = 0
 
-    mf = spark._jvm.java.lang.management.ManagementFactory
-    jit, gcs = mf.getCompilationMXBean(), mf.getGarbageCollectorMXBeans()
-
-    def counters() -> tuple[int, int, int, float, float, float]:
-        """Spark jobs, SQL executions and Scan nodes so far, the
-        process tree's CPU seconds and the JVM's JIT and GC seconds.
-        Scans are counted in the plan graphs (the final adaptive
+    def read(self) -> tuple[int, int, int, float, float, float]:
+        """Scans are counted in the plan graphs (the final adaptive
         plans) of the executions that finished since the previous
         call."""
-        nonlocal next_exec, scans
-        sc.listenerBus().waitUntilEmpty(30_000)
-        while not sql.execution(next_exec).isEmpty():
-            nodes = sql.planGraph(next_exec).allNodes()
-            scans += sum(1 for i in range(nodes.size())
-                         if nodes.apply(i).name().startswith(
-                             ("Scan", "BatchScan")))
-            next_exec += 1
-        return (sc.dagScheduler().nextJobId(), sql.executionsCount(),
-                scans, bench.tree_cpu_s(),
-                jit.getTotalCompilationTime() / 1e3,
-                sum(g.getCollectionTime() for g in gcs) / 1e3)
+        sql = self.sql
+        self.sc.listenerBus().waitUntilEmpty(30_000)
+        while not sql.execution(self.next_exec).isEmpty():
+            nodes = sql.planGraph(self.next_exec).allNodes()
+            self.scans += sum(1 for i in range(nodes.size())
+                              if nodes.apply(i).name().startswith(
+                                  ("Scan", "BatchScan")))
+            self.next_exec += 1
+        return (self.sc.dagScheduler().nextJobId(),
+                sql.executionsCount(), self.scans,
+                self.bench.tree_cpu_s(),
+                self.jit.getTotalCompilationTime() / 1e3,
+                sum(g.getCollectionTime() for g in self.gcs) / 1e3)
 
+    def table(self, title: str, label: str, steps) -> None:
+        """Run ``steps`` -- (name, prepare, run, check) tuples, None
+        for no prepare or check -- one at a time and print each
+        one's counter deltas, counted around ``run`` only, and the
+        total."""
+        width = max(len(label), *(len(st[0]) for st in steps))
+        print(f"{title}\n  {label:<{width}}  {self.HEADER}")
+        total = [0, 0, 0, 0.0, 0.0, 0.0]
+        for name, prepare, run, check in steps:
+            if prepare is not None:
+                prepare()
+            before = self.read()
+            out = run()
+            delta = [a - b for a, b in zip(self.read(), before)]
+            if check is not None:
+                check(out)
+            total = [t + d for t, d in zip(total, delta)]
+            print(f"  {name:<{width}}  {self.row(delta)}")
+        print(f"  {'total':<{width}}  {self.row(total)}")
+
+    @staticmethod
     def row(d) -> str:
         return (f"{d[0]:10d}  {d[1]:9d}  {d[2]:5d}  {d[3]:5.2f}  "
                 f"{d[4]:5.2f}  {d[5]:5.2f}")
 
+
+def _bench():
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import run as bench
+
+    bench.bootstrap()
+    return bench
+
+
+def nightly(months: int, scale: int, seed: int) -> None:
+    bench = _bench()
+    from workloads import NightlyDag
+
+    spark = bench.start_session(len(os.sched_getaffinity(0)))
     try:
+        counters = Counters(spark, bench)
         wl = NightlyDag(spark, os.path.join(bench.WORK, "profile_nightly"),
                         seed, scale=scale)
         wl.setup()
@@ -152,23 +202,42 @@ def nightly(months: int, scale: int, seed: int) -> None:
                         and set(reg[n].depends_on) <= done)
             order.append(name)
             done.add(name)
-        print(f"nightly_dag scale {scale}, seed {seed}, {sc.master()}")
+        print(f"nightly_dag scale {scale}, seed {seed}, "
+              f"{spark.sparkContext.master}")
         for _ in range(2):  # the benchmark's warm-up: month 0 twice
             res = reg.run_all(spark, wl.run_date(0))
             if set(res.values()) != {"ok"}:
                 sys.exit(f"warm-up nightly failed: {res}")
-        width = max(map(len, order))
         for p in range(1, months + 1):
-            print(f"month {wl.run_date(p):%Y-%m}\n  {'job':<{width}}  "
-                  f"spark jobs  sql execs  scans  cpu s  jit s   gc s")
-            total = [0, 0, 0, 0.0, 0.0, 0.0]
-            for name in order:
-                before = counters()
-                reg[name].run(spark, wl.run_date(p))
-                delta = [a - b for a, b in zip(counters(), before)]
-                total = [t + d for t, d in zip(total, delta)]
-                print(f"  {name:<{width}}  {row(delta)}")
-            print(f"  {'total':<{width}}  {row(total)}")
+            counters.table(
+                f"month {wl.run_date(p):%Y-%m}", "job",
+                [(name, None,
+                  lambda name=name: reg[name].run(spark, wl.run_date(p)),
+                  None) for name in order])
+    finally:
+        bench.stop_session(spark)
+
+
+def lakehouse(passes: int, seed: int) -> None:
+    bench = _bench()
+
+    spark = bench.start_session(len(os.sched_getaffinity(0)))
+    try:
+        counters = Counters(spark, bench)
+        work = os.path.join(bench.WORK, "profile_lakehouse")
+        wl = bench.make_workload("lakehouse_rw", spark, work, seed)
+        wl.setup()
+        print(f"lakehouse_rw seed {seed}, {spark.sparkContext.master}")
+        h = bench.Harness(spark, wl, bench.Tracer(), None)
+        h.run_pass(wl.warmup_ops(), "warmup", -1)
+        if any(r.error for r in h.records):
+            sys.exit(f"warm-up pass failed: "
+                     f"{[r.error for r in h.records if r.error]}")
+        for p in range(passes):
+            counters.table(f"pass {p}", "op",
+                           [(op.name, op.prepare, op.run, op.check)
+                            for op in wl.pass_ops(p)])
+        wl.close()
     finally:
         bench.stop_session(spark)
 
